@@ -17,7 +17,6 @@ __all__ = [
     "extract_layout_docs",
     "grade",
     "run_extract",
-    "salted_repartition",
     "read_pages",
     "write_pages_partitioned",
     # training-data curation tier
@@ -48,10 +47,6 @@ _LAZY = {
     ),
     "grade": ("ai_service_ocr_grading_handler_spark.operators.scoring", "grade"),
     "run_extract": ("ai_service_ocr_grading_handler_spark.plans.lineage", "run_extract"),
-    "salted_repartition": (
-        "ai_service_ocr_grading_handler_spark.plans.lineage",
-        "salted_repartition",
-    ),
     "curate_corpus": (
         "ai_service_ocr_grading_handler_spark.operators.curation",
         "curate_corpus",

@@ -26,7 +26,7 @@ Everything is a pure function of (doc_id, text, lang, source) — no RNG state
 leaks across rows, so the corpus is byte-stable under any partitioning.
 
 Host assignment is intentionally skewed (one hot host takes ~30% of pages)
-to exercise salted repartitioning (SURVEY.md §4).
+to exercise host-skewed plans: the per-host queries and AQE skew joins.
 """
 
 from __future__ import annotations

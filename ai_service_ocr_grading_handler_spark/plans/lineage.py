@@ -13,9 +13,15 @@ North-rule requirements implemented here (BASELINE.json):
   the same logic rides snapshot ids (incremental read from the last
   manifest's snapshot); the parquet layout here is the catalog-free
   equivalent keyed on url.
-- **skew handling**: pages are salted-repartitioned on
-  (host, xxhash64(url) % S) before the kernel so one hot host (the corpus
-  plants ~30% on host0, corpus.py:76-79) cannot serialize a task.
+- **no raw-bytes shuffle**: the kernel is a per-row map, so it runs on
+  the scan splits (widened only when the scan is narrower than the task
+  slots) and a hot host (the corpus plants ~30% on host0,
+  corpus.py:76-79) never serializes a task; the frontier anti-join reads
+  only the `url` column and broadcasts while the frontier is small.
+- **known schemas**: the program's own tables are read with the schema it
+  wrote (`EXTRACTED_SCHEMA_DDL` + `run_id string`, `METRICS_SCHEMA_DDL`),
+  so no read runs a schema-inference job and a numeric-looking run_id
+  stays a string (run "01" never matches partition run_id=1).
 
 The reference's analog is at-least-once SQS redelivery + content dedup
 (/root/reference/engine/gen_utils_files/testCase.txt:352-357) and the
@@ -32,24 +38,23 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ai_service_ocr_grading_handler_spark.operators.extract import extract_pages
+from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
+from ai_service_ocr_grading_handler_spark.operators.extract import (
+    EXTRACTED_SCHEMA_DDL,
+    extract_pages,
+)
 
 HOST_RE = r"https?://([^/]+)/"
+
+# one metrics-ledger row per output file of a run (run_id is the partition)
+METRICS_SCHEMA_DDL = (
+    "out_file string, row_count bigint, checksum bigint, content_chars bigint, "
+    "extract_us bigint, min_warc_ts timestamp, max_warc_ts timestamp"
+)
 
 
 def host_col(url_col: str = "url"):
     return F.regexp_extract(F.col(url_col), HOST_RE, 1)
-
-
-def salted_repartition(
-    df: DataFrame, n_parts: int, salt_buckets: int = 64, url_col: str = "url"
-) -> DataFrame:
-    """Repartition on (host, salt) so hot hosts spread over `salt_buckets`
-    tasks while small hosts stay clustered (SURVEY.md §4: salting is a data
-    op, not a planner rule). Salt is derived from the url hash ->
-    deterministic across runs."""
-    salt = F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_buckets))
-    return df.repartition(n_parts, host_col(url_col), salt)
 
 
 def _extracted_dir(out_root: str) -> Path:
@@ -58,6 +63,13 @@ def _extracted_dir(out_root: str) -> Path:
 
 def _metrics_dir(out_root: str) -> Path:
     return Path(out_root) / "metrics"
+
+
+def _run_metrics_dir(spark: SparkSession, out_root: str, run_id: str) -> Path:
+    """The run's partition of the metrics ledger, named exactly as
+    ``partitionBy("run_id")`` would name it (Spark's own path escaping)."""
+    esc = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return _metrics_dir(out_root) / f"run_id={esc.escapePathName(run_id)}"
 
 
 def _manifest_path(out_root: str, run_id: str) -> Path:
@@ -77,13 +89,34 @@ def _committed_parquet(d: Path) -> bool:
     return False
 
 
+def _read_extracted(spark: SparkSession, out_root: str) -> DataFrame:
+    schema = EXTRACTED_SCHEMA_DDL + ", run_id string"
+    return spark.read.schema(schema).parquet(str(_extracted_dir(out_root)))
+
+
+def _ledger_totals(metrics: DataFrame) -> dict:
+    """rows, files and the xor checksum over metrics-ledger rows. The
+    ledger holds one row per output file, so it is collected, not
+    aggregated: one small scan, no shuffle. Python's ``^`` on signed ints
+    equals Spark's 64-bit ``bit_xor``."""
+    rows = metrics.select("row_count", "checksum").collect()
+    checksum = 0
+    for r in rows:
+        checksum ^= r["checksum"]
+    return {
+        "rows": sum(r["row_count"] for r in rows),
+        "files": len(rows),
+        "checksum": checksum,
+    }
+
+
 def completed_urls(spark: SparkSession, out_root: str) -> DataFrame | None:
     """The resume frontier: urls already committed to the extracted table
     (column-pruned scan — only `url` is read)."""
     d = _extracted_dir(out_root)
     if not d.exists() or not _committed_parquet(d):
         return None
-    return spark.read.parquet(str(d)).select("url")
+    return _read_extracted(spark, out_root).select("url")
 
 
 def run_extract(
@@ -91,19 +124,18 @@ def run_extract(
     pages: DataFrame,
     out_root: str,
     run_id: str,
-    n_parts: int | None = None,
 ) -> dict:
-    """One resumable extraction run: anti-join the frontier, salt, extract,
-    append, then compute lineage from the committed files.
+    """One resumable extraction run: anti-join the frontier, extract on the
+    scan splits, append, then compute lineage from the committed files.
 
     Returns the manifest dict (also written to <out_root>/runs/<run_id>.json).
     """
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
     input_files = pages.inputFiles()
 
     done = completed_urls(spark, out_root)
     todo = pages.join(done, "url", "left_anti") if done is not None else pages
-    todo = salted_repartition(todo, n_parts)
+    # probe the scan, not the join: probing a broadcast join runs it eagerly
+    todo = widen_if_narrow(todo, probe=pages)
 
     extracted = extract_pages(todo).withColumn("run_id", F.lit(run_id))
     (
@@ -115,50 +147,34 @@ def run_extract(
     # lineage/metrics from COMMITTED data only (no kernel re-run; `html` was
     # dropped by the kernel so this scan is narrow)
     back = (
-        spark.read.parquet(str(_extracted_dir(out_root)))
+        _read_extracted(spark, out_root)
         .filter(F.col("run_id") == run_id)
         .withColumn("out_file", F.input_file_name())
     )
-    metrics = back.groupBy("run_id", "out_file").agg(
+    metrics = back.groupBy("out_file").agg(
         F.count(F.lit(1)).alias("row_count"),
         F.bit_xor(F.xxhash64("url", "text")).alias("checksum"),
         F.sum("content_chars").alias("content_chars"),
         F.sum("extract_us").alias("extract_us"),
         F.min("warc_ts").alias("min_warc_ts"),
         F.max("warc_ts").alias("max_warc_ts"),
-    ).persist()  # consumed twice (ledger write + manifest agg): one scan
-    # IDEMPOTENT ledger write: dynamic partition overwrite REPLACES exactly
-    # this run_id's rows, derived from committed data. A plain append (the
-    # old form) double-counted the run's metrics on every completed-run
-    # re-invocation, and a crash between the data commit and the metrics
-    # write lost the rows forever — with replace-from-committed, the same
-    # re-run REPAIRS that window instead (found by review; pinned by test).
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        metrics.write.mode("overwrite").partitionBy("run_id").parquet(
-            str(_metrics_dir(out_root))
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-    m = (
-        metrics.agg(
-            F.coalesce(F.sum("row_count"), F.lit(0)).alias("rows"),
-            F.coalesce(F.bit_xor("checksum"), F.lit(0)).alias("checksum"),
-            F.count(F.lit(1)).alias("files"),
-        )
-        .collect()[0]
-        .asDict()
     )
-    metrics.unpersist()
+    # IDEMPOTENT ledger write: overwriting the run's own partition directory
+    # REPLACES exactly this run_id's rows, derived from committed data: a
+    # re-run of a completed run_id never double-counts, and re-running the
+    # same run_id REPAIRS a crash between the data commit and this write
+    # (pinned by test).
+    run_metrics = str(_run_metrics_dir(spark, out_root, run_id))
+    metrics.write.mode("overwrite").parquet(run_metrics)
+
+    m = _ledger_totals(spark.read.schema(METRICS_SCHEMA_DDL).parquet(run_metrics))
     manifest = {
         "run_id": run_id,
         "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "input_files": sorted(input_files),
-        "rows_written": int(m["rows"]),
-        "output_files": int(m["files"]),
-        "checksum": int(m["checksum"]),
+        "rows_written": m["rows"],
+        "output_files": m["files"],
+        "checksum": m["checksum"],
     }
     p = _manifest_path(out_root, run_id)
     p.parent.mkdir(parents=True, exist_ok=True)
@@ -203,17 +219,20 @@ def merge_upsert(
     Semantics: rows in `updates` REPLACE ledger rows with the same key ($set,
     last-write-wins), unmatched keys are inserted (upsert). Applying the same
     update twice is a no-op — the ledger converges, it never double-applies
-    (the idempotency the reference gets from SQS content dedup).
+    (the idempotency the reference gets from SQS content dedup). A NULL key
+    is one key like any other: updates with a NULL key replace the ledger's
+    NULL-key row, so the ledger holds at most one of them.
 
-    Mechanics: read the committed ledger (if any), anti-join out the keys
-    being updated, union the updates, write to a NEW versioned directory,
-    then atomically swap a `current` pointer file. Readers resolve the
-    pointer first, so a crash mid-write leaves the previous version intact —
-    the same reader-isolation Iceberg gives via snapshot pointers; with an
-    Iceberg catalog this whole function is `MERGE INTO ledger USING updates
-    ON ledger.{key} = updates.{key} WHEN MATCHED THEN UPDATE SET * WHEN NOT
-    MATCHED THEN INSERT *`. One shuffle on the key; at 100 TB the ledger and
-    updates are bucketed on the key so the anti-join is co-located.
+    Mechanics: read the committed ledger (if any), union it (tag 0) with the
+    updates (tag 1) and keep, per key, the max of struct(tag, *rest) — one
+    shuffle on the key, in which an update beats the ledger row. Write the
+    result to a NEW versioned directory, then atomically swap a `current`
+    pointer file. Readers resolve the pointer first, so a crash mid-write
+    leaves the previous version intact — the same reader-isolation Iceberg
+    gives via snapshot pointers; with an Iceberg catalog this whole function
+    is `MERGE INTO ledger USING updates ON ledger.{key} <=> updates.{key}
+    WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`. At
+    100 TB the ledger is bucketed on the key so the shuffle is one-sided.
     """
     def _crash(point: str) -> None:
         if _crash_after == point:
@@ -229,20 +248,19 @@ def merge_upsert(
     # applies them serially). A batch frame has no arrival order, so the
     # deterministic resolution is max-by-struct over the full row — stable
     # across partitionings, and a caller that needs true last-write-wins
-    # orders by a version column it includes in the row (found by review:
-    # duplicate keys used to be inserted side by side, corrupting the
-    # ledger for every later read).
+    # orders by a version column it includes in the row (duplicate keys
+    # used to be inserted side by side, corrupting the ledger for every
+    # later read). The tag in front makes any update beat the ledger row.
     cols = updates.columns
-    deduped = (
-        updates.groupBy(key)
-        .agg(F.max(F.struct(*[c for c in cols if c != key])).alias("_r"))
+    tag = "_upsert_tag"
+    rows = updates.withColumn(tag, F.lit(1))
+    if base is not None:
+        rows = base.withColumn(tag, F.lit(0)).unionByName(rows)
+    merged = (
+        rows.groupBy(key)
+        .agg(F.max(F.struct(tag, *[c for c in cols if c != key])).alias("_r"))
         .select(key, "_r.*")
         .select(*cols)
-    )
-    merged = (
-        base.join(deduped.select(key), key, "left_anti").unionByName(deduped)
-        if base is not None
-        else deduped
     )
     version = f"v{int(pointer.read_text().strip()[1:]) + 1}" if pointer.exists() else "v0"
     merged.write.mode("overwrite").parquet(str(root / version))
@@ -263,33 +281,32 @@ def merge_upsert(
         if vdir.is_dir() and vdir.name not in keep:
             _sh.rmtree(vdir, ignore_errors=True)
     _crash("gc")
-    return spark.read.parquet(str(root / version))
+    return spark.read.schema(merged.schema).parquet(str(root / version))
 
 
 def verify_table(spark: SparkSession, out_root: str) -> dict:
     """Cross-check the extracted table against the metrics ledger:
     row counts and the global bit_xor checksum must agree."""
-    ext = spark.read.parquet(str(_extracted_dir(out_root)))
+    ext = _read_extracted(spark, out_root)
     got = ext.agg(
         F.count(F.lit(1)).alias("rows"),
         F.countDistinct("url").alias("urls"),
         F.bit_xor(F.xxhash64("url", "text")).alias("checksum"),
     ).collect()[0]
-    want = (
-        spark.read.parquet(str(_metrics_dir(out_root)))
-        .agg(
-            F.sum("row_count").alias("rows"),
-            F.bit_xor("checksum").alias("checksum"),
+    want = _ledger_totals(
+        spark.read.schema(METRICS_SCHEMA_DDL + ", run_id string").parquet(
+            str(_metrics_dir(out_root))
         )
-        .collect()[0]
     )
+    rows, urls = int(got["rows"]), int(got["urls"])
+    checksum = int(got["checksum"] or 0)  # bit_xor of no rows is NULL
     return {
-        "rows": int(got["rows"]),
-        "distinct_urls": int(got["urls"]),
-        "checksum": int(got["checksum"]),
-        "ledger_rows": int(want["rows"]),
-        "ledger_checksum": int(want["checksum"]),
-        "consistent": int(got["rows"]) == int(want["rows"])
-        and int(got["checksum"]) == int(want["checksum"])
-        and int(got["rows"]) == int(got["urls"]),
+        "rows": rows,
+        "distinct_urls": urls,
+        "checksum": checksum,
+        "ledger_rows": want["rows"],
+        "ledger_checksum": want["checksum"],
+        "consistent": rows == want["rows"]
+        and checksum == want["checksum"]
+        and rows == urls,
     }

@@ -1,5 +1,6 @@
 """AQE skew-join splitting: the runtime half of the skew story (the other
-half, salted repartition before the kernel, is tests/test_lineage.py).
+half needs no test: the kernel is a narrow map over the scan splits, so a hot
+host never lands in one task — see plans/lineage.py).
 Thresholds are lowered so the planted hot key triggers the optimization at
 test scale — on a real cluster the defaults (256 MB) fire the same path."""
 

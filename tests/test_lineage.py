@@ -67,27 +67,6 @@ def test_partial_crash_then_resume_equals_single_run(spark, tmp_path):
     assert manifest["rows_written"] == m2["rows_written"]
 
 
-def test_salted_repartition_balances_hot_host(spark, tmp_path):
-    """The corpus plants ~30% of pages on one host; salting must spread it."""
-    pages = _pages(spark, tmp_path)
-    n_parts = 16
-
-    by_host = pages.repartition(n_parts, lineage.host_col())
-    salted = lineage.salted_repartition(pages, n_parts)
-
-    def sizes(df):
-        return [
-            r["count"]
-            for r in df.groupBy(F.spark_partition_id().alias("p")).count().collect()
-        ]
-
-    hot = max(sizes(by_host))
-    balanced = max(sizes(salted))
-    total = pages.count()
-    assert hot >= 0.25 * total  # the skew is real without salting
-    assert balanced <= 0.15 * total  # and gone with it
-
-
 def test_metrics_ledger_has_lineage_columns(spark, tmp_path):
     pages = _pages(spark, tmp_path)
     out = str(tmp_path / "job")
@@ -337,3 +316,80 @@ def test_merge_upsert_gcs_old_versions(spark, tmp_path):
     versions = sorted(p.name for p in ledger.glob("v*") if p.is_dir())
     assert versions == ["v2", "v3"]
     assert (ledger / "current").read_text().strip() == "v3"
+
+
+def test_numeric_looking_run_ids_stay_distinct(spark, tmp_path):
+    """run_id is a string: run "01" must not match partition run_id=1 (with
+    an inferred partition type both read as the integer 1, so run "01"
+    reported the whole table and overwrote run "1"'s ledger rows)."""
+    pages = _pages(spark, tmp_path)
+    out = str(tmp_path / "job")
+    half = pages.filter(F.xxhash64("url") % 2 == 0)
+    m1 = lineage.run_extract(spark, half, out, run_id="1")
+    m2 = lineage.run_extract(spark, pages, out, run_id="01")
+    assert m1["rows_written"] == half.count()
+    assert m2["rows_written"] == pages.count() - m1["rows_written"]
+    runs = sorted(p.name for p in (tmp_path / "job/metrics").iterdir() if p.is_dir())
+    assert runs == ["run_id=01", "run_id=1"]
+    v = lineage.verify_table(spark, out)
+    assert v["consistent"] and v["rows"] == pages.count(), v
+
+
+def test_merge_upsert_null_key_is_one_key(spark, tmp_path):
+    """A NULL key is replaced like any other key, so re-applying an update
+    that carries one is a no-op (an anti-join never matches NULL, which
+    added another NULL-key row on every merge)."""
+    ledger = str(tmp_path / "ledger")
+    schema = "user_id bigint, credits double"
+    lineage.merge_upsert(
+        spark, ledger, spark.createDataFrame([(None, 6.0), (1, 1.0)], schema), "user_id"
+    )
+    upd = spark.createDataFrame([(None, 7.0)], schema)
+    first = sorted(lineage.merge_upsert(spark, ledger, upd, "user_id").collect(), key=str)
+    again = sorted(lineage.merge_upsert(spark, ledger, upd, "user_id").collect(), key=str)
+    assert [tuple(r) for r in first] == [(1, 1.0), (None, 7.0)]
+    assert again == first
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run `fn` with its Spark jobs tagged as `group`; return (result,
+    number of jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resume_path_job_counts(spark, tmp_path):
+    """The resume -> merge -> verify path runs a bounded number of Spark
+    jobs: no schema-inference job on the program's own tables, no persisted
+    ledger, a one-shuffle merge. Measured on sf0.001 with 8 slots (the
+    one-file scan is widened, adding a shuffle): run_extract 6 jobs,
+    merge_upsert 3, verify_table 4 (before: 10, 6 and 7)."""
+    pages = _pages(spark, tmp_path)
+    out = str(tmp_path / "job")
+    ledger = str(tmp_path / "ledger")
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    lineage.run_extract(spark, pages.filter(F.xxhash64("url") % 2 == 0), out, "r1")
+
+    def extracted(run_id):
+        ext = spark.read.parquet(f"{out}/extracted")
+        return ext.filter(F.col("run_id") == run_id).select("url", "content_chars")
+
+    lineage.merge_upsert(spark, ledger, extracted("r1"), "url")
+    mode = spark.conf.get(conf)
+
+    m, n_run = _jobs_in_group(spark, "lineage-run", lambda: lineage.run_extract(spark, pages, out, "r2"))
+    assert spark.conf.get(conf) == mode
+    new = extracted("r2")
+    _, n_merge = _jobs_in_group(spark, "lineage-merge", lambda: lineage.merge_upsert(spark, ledger, new, "url"))
+    v, n_verify = _jobs_in_group(spark, "lineage-verify", lambda: lineage.verify_table(spark, out))
+
+    assert m["rows_written"] > 0 and v["consistent"], (m, v)
+    assert lineage.read_ledger(spark, ledger).count() == pages.count()
+    assert n_run <= 6 and n_merge <= 3 and n_verify <= 4, (n_run, n_merge, n_verify)
