@@ -362,13 +362,8 @@ def requests_df(spark, sf_dir: str):
 PAGES_SCHEMA_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
-def pages_df_from_documents(spark, sf_dir: str, replicate: int = 1):
-    """documents.parquet -> pages DataFrame via Arrow-batched mapInPandas.
-
-    ``replicate`` > 1 clones each doc with distinct urls (bench corpus
-    scaling); replication index is folded into doc_id so html/boilerplate
-    stay distinct across clones.
-    """
+def pages_df_from_documents(spark, sf_dir: str):
+    """documents.parquet -> pages DataFrame via Arrow-batched mapInPandas."""
     import pandas as pd
 
     # select BEFORE the kernel: a Python map node is a pruning barrier, so
@@ -377,17 +372,15 @@ def pages_df_from_documents(spark, sf_dir: str, replicate: int = 1):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "lang", "source"
     )
-    n_rep = int(replicate)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: list[dict] = []
-            for doc_id, text, lang, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
-            ):
-                for rep in range(n_rep):
-                    rid = int(doc_id) + rep * 1_000_000
-                    out.append(synth_page_row(rid, text, lang, source))
+            out = [
+                synth_page_row(int(doc_id), text, lang, source)
+                for doc_id, text, lang, source in zip(
+                    pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
+                )
+            ]
             yield pd.DataFrame(
                 out, columns=["url", "warc_ts", "html", "text", "lang"]
             )

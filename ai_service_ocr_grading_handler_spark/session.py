@@ -1,10 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
-Tuned for the sandbox (single JVM, local[N]) but every setting is the one
-you'd ship to a 1000-executor cluster: AQE on (runtime coalescing + skew-join
-splitting), Arrow enabled for the Python kernel boundary, bounded Arrow batch
-size so the extraction kernel's working set stays in executor memory at
-100 TB scale (batch width governs peak per-task memory, not data size).
+One conf table serves both entry points: AQE on (runtime coalescing +
+skew-join splitting), Arrow for the Python kernel boundary with a bounded
+batch (batch width governs peak per-task memory, not data size), and UTC.
 """
 
 from __future__ import annotations
@@ -13,7 +11,27 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+SQL_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
+def shuffle_partitions_for(slots: int) -> int:
+    """Initial shuffle partitions for ``slots`` task slots: AQE coalescing
+    owns the downsizing, and more waves of smaller tasks (2x slots measured
+    ~40% slower on minhash; 200 is worse) are pure per-task overhead."""
+    return max(slots, 32)
+
+
+def _driver_memory() -> str:
+    """Half the host's memory, capped at 24 GiB; SPARK_GRAFT_DRIVER_MEM wins."""
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(host_mb // 2, 24 << 10)}m")
 
 
 def get_spark(
@@ -21,60 +39,40 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    n = DEFAULT_CPUS if cpus is None else int(cpus)
-    if n <= 0:
-        raise ValueError(f"cpus must be >= 1, got {n}")
-    builder = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # initial shuffle partitions = task slots: AQE coalescing owns the
-        # downsizing anyway, and the old 2x-slots default measured ~40%
-        # slower on the shuffle-heaviest query (minhash) at local[32] —
-        # two waves of half-sized tasks, pure per-task overhead. On a real
-        # cluster this scales with total cores by the same rule.
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(max(n, 32) if shuffle_partitions is None else shuffle_partitions),
+    """Session with the conf table applied. When this process launches the
+    JVM it runs on ``local[cpus]`` (default: the CPUs this process may use)
+    with a host-sized heap; under spark-submit, which launched the JVM and
+    set the gateway port, the submitted master and memory win."""
+    builder = SparkSession.builder.appName(app_name)
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        n = len(os.sched_getaffinity(0)) if cpus is None else int(cpus)
+        if n <= 0:
+            raise ValueError(f"cpus must be >= 1, got {n}")
+        builder = (
+            builder.master(f"local[{n}]")
+            .config("spark.driver.memory", _driver_memory())
+            .config("spark.ui.enabled", "false")
+            .config("spark.ui.showConsoleProgress", "false")
         )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-    )
-    return builder.getOrCreate()
+    for k, v in SQL_CONFS.items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        shuffle_partitions = shuffle_partitions_for(spark.sparkContext.defaultParallelism)
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an externally provided session
-    (the driver hands us one in `entry`/`queries`)."""
-    # shuffle partitions ARE runtime-settable and matter most: an external
-    # session's default (200) runs the shuffle-heaviest queries in ~6 waves
-    # of undersized tasks — the ~40% regression measured in get_spark's
-    # comment — so the driver path must get the same sizing bench.py does
-    # (review finding).
+    """Apply the conf table and the shuffle sizing to a session the program
+    did not build (the driver hands us one in `entry`/`queries`)."""
+    confs = dict(SQL_CONFS)
     try:
-        par = int(spark.sparkContext.defaultParallelism)
+        slots = spark.sparkContext.defaultParallelism
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions_for(slots))
     except Exception:  # Spark Connect: no sparkContext; keep session value
-        par = 0
-    if par:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", str(max(par, 32)))
-        except Exception:
-            pass
-    for k, v in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.execution.arrow.maxRecordsPerBatch", "2048"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
+        pass
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -10,7 +10,7 @@ Cluster usage (north rule: packaged for --py-files):
 
 Local smoke (also exercised by tests/test_submit.py):
 
-    spark-submit scripts/run_extract.py --pages ... --out ... --run-id r1 --cpus 8
+    spark-submit --master local[8] scripts/run_extract.py --pages ... --out ... --run-id r1
 
 The job is idempotent: re-running with the same --out resumes from the
 committed url frontier (see ai_service_ocr_grading_handler_spark/plans/lineage.py).
@@ -32,18 +32,12 @@ def main() -> None:
     ap.add_argument("--pages", required=True, help="pages parquet path")
     ap.add_argument("--out", required=True, help="job output root")
     ap.add_argument("--run-id", required=True)
-    ap.add_argument("--cpus", type=int, default=None, help="local[N] fallback")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from ai_service_ocr_grading_handler_spark.session import get_spark
 
-    from ai_service_ocr_grading_handler_spark.session import get_spark, tune_session
-
-    active = SparkSession.getActiveSession()
-    if active is not None:  # spark-submit on a cluster provides the session
-        spark = tune_session(active)
-    else:
-        spark = get_spark(app_name=f"extract-{args.run_id}", cpus=args.cpus)
+    # spark-submit's --master and --driver-memory size the job
+    spark = get_spark(app_name=f"extract-{args.run_id}")
 
     from ai_service_ocr_grading_handler_spark.plans import lineage
 

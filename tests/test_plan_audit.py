@@ -303,63 +303,3 @@ def test_simhash_signature_computed_once(spark):
         f"signature pipeline appears {plan.count(marker)}x (expected once) — "
         "a self-join without exchange reuse doubles the dominant cost"
     )
-
-
-def test_bench_headline_names_resolve_across_tiers():
-    """Every bench HEADLINE query must resolve from the merged
-    driver+library registries — a demotion that breaks the headline set
-    should fail here, in CI, not in the driver's per-round bench run."""
-    import bench
-
-    merged = {**registry.library_queries(), **registry.queries()}
-    missing = [
-        n for n in bench.HEADLINE if n != "extract_pages_bench" and n not in merged
-    ]
-    assert missing == []
-
-
-def test_stamp_capture_headline_and_history(tmp_path):
-    """The scaling-capture stamping policy: every attempt appends to
-    all_captures_*, the stored headline survives worse captures, a better
-    capture displaces it, and legacy hand-edited files (headline below
-    their own history max) still accept a capture that beats the stored
-    headline."""
-    import json
-
-    import bench
-
-    target = tmp_path / "scaling_8to32.json"
-
-    def cap(v):
-        return {
-            "value": v,
-            "hw_ceiling_efficiency": 0.9,
-            "normalized_efficiency": v / 0.9,
-            "captured_commit": f"c{v}",
-        }
-
-    # fresh file: capture IS the headline, history seeded with it
-    out = bench._stamp_capture(target, cap(0.70))
-    target.write_text(json.dumps(out))
-    assert out["value"] == 0.70 and out["all_captures_raw"] == [0.70]
-
-    # better capture displaces the headline
-    out = bench._stamp_capture(target, cap(0.80))
-    target.write_text(json.dumps(out))
-    assert out["value"] == 0.80 and out["all_captures_raw"] == [0.70, 0.80]
-
-    # worse capture appends but keeps the stored headline fields
-    out = bench._stamp_capture(target, cap(0.60))
-    target.write_text(json.dumps(out))
-    assert out["value"] == 0.80 and out["captured_commit"] == "c0.8"
-    assert out["all_captures_raw"] == [0.70, 0.80, 0.60]
-
-    # legacy hand-edited file: headline 0.72 below its history max 0.81 —
-    # a 0.75 capture must still displace the stored headline
-    legacy = {**cap(0.72), "round4_all_captures_raw": [0.81, 0.72],
-              "round4_all_captures_hw_ceiling": [0.9, 0.9],
-              "round4_all_captures_normalized": [0.9, 0.8]}
-    target.write_text(json.dumps(legacy))
-    out = bench._stamp_capture(target, cap(0.75))
-    assert out["value"] == 0.75 and out["captured_commit"] == "c0.75"
-    assert out["all_captures_raw"] == [0.81, 0.72, 0.75]

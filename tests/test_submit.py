@@ -7,6 +7,7 @@ import json
 import shutil
 import subprocess
 import sys
+import textwrap
 from pathlib import Path
 
 import pytest
@@ -56,8 +57,6 @@ def test_spark_submit_pyfiles_runs_and_resumes(spark, tmp_path, pyfiles_zip):
                 out_root,
                 "--run-id",
                 run_id,
-                "--cpus",
-                "4",
             ],
             capture_output=True,
             text=True,
@@ -72,3 +71,36 @@ def test_spark_submit_pyfiles_runs_and_resumes(spark, tmp_path, pyfiles_zip):
     assert m1["rows_written"] == n
     m2 = submit("run-002")  # resume: no-op
     assert m2["rows_written"] == 0
+
+
+def test_spark_submit_master_and_memory_win(tmp_path):
+    """Under spark-submit the JVM is already launched with the submitted
+    sizing: get_spark must keep that master and heap, not its own."""
+    spark_submit = shutil.which("spark-submit")
+    if spark_submit is None:
+        pytest.skip("spark-submit not on PATH")
+
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {str(REPO)!r})
+            from ai_service_ocr_grading_handler_spark.session import get_spark
+            spark = get_spark(cpus=3)
+            conf = spark.sparkContext.getConf()
+            print("PROBE", spark.sparkContext.master, conf.get("spark.driver.memory"))
+            spark.stop()
+            """
+        )
+    )
+    r = subprocess.run(
+        [spark_submit, "--master", "local[2]", "--driver-memory", "1g", str(probe)],
+        capture_output=True,
+        text=True,
+        cwd=str(tmp_path),
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    line = [l for l in r.stdout.splitlines() if l.startswith("PROBE ")][-1]
+    assert line.split()[1:] == ["local[2]", "1g"]
