@@ -43,6 +43,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
+from ai_service_ocr_grading_handler_spark.core.telemetry import Recent, observed
 
 # --- corpus with planted duplicates ------------------------------------------
 # 20% of documents get an exact copy (+1M id) and a near copy (+2M id, last
@@ -243,33 +244,16 @@ _PERM_B = [(i * 0x85EBCA77 + 13) % _MERSENNE31 for i in range(1, MINHASH_PERMS +
 
 
 def _shingle_h31_expr() -> str:
-    """SQL text of the shingle -> 31-bit hash array (see _shingle_h31)."""
+    """SQL text of the shingle -> 31-bit hash array, computed ONCE per
+    row; permutations fold over this array instead of re-hashing strings.
+    md5-derived (not xxhash64) so the DuckDB oracle reproduces every
+    signature bit."""
     return f"transform({_SHINGLE_H60_SPARK}, h -> h % {_MERSENNE31})"
-
-
-def _shingle_h31(text_col: str = "text") -> Column:
-    """Shingle -> 31-bit hash array, computed ONCE per row; permutations
-    fold over this array instead of re-hashing strings. md5-derived (not
-    xxhash64) so the DuckDB oracle reproduces every signature bit."""
-    return F.expr(_shingle_h31_expr())
 
 
 SHINGLE_H31_DUCK = (
     f"list_transform({SHINGLE_H60_DUCK}, h -> h % {_MERSENNE31})"
 )
-
-
-def _sig_k_over(hashes: Column, k: int) -> Column:
-    """k-th MinHash signature value over precomputed shingle hashes:
-    min((a_k*h31+b_k) mod 2^31-1) — a cheap integer fold (constants < 2^31
-    keep a*h+b < 2^63: Spark 4 ANSI mode errors on long overflow)."""
-    a, b = _PERM_A[k], _PERM_B[k]
-    return F.array_min(
-        F.transform(
-            hashes,
-            lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_MERSENNE31)),
-        )
-    )
 
 
 def _sig_duck(hashes_col: str, k: int) -> str:
@@ -279,12 +263,6 @@ def _sig_duck(hashes_col: str, k: int) -> str:
     Spark form must exist or the two drift silently)."""
     a, b = _PERM_A[k], _PERM_B[k]
     return f"list_min(list_transform({hashes_col}, h -> ({a} * h + {b}) % {_MERSENNE31}))"
-
-
-def minhash_signature() -> Column:
-    """Full 32-permutation MinHash signature array (single-expression form;
-    prefer minhash_bands_df for the pipeline — see its note on CSE)."""
-    return F.array(*[_sig_k_over(_shingle_h31(), k) for k in range(MINHASH_PERMS)])
 
 
 def minhash_bands_df(
@@ -385,6 +363,49 @@ def in_bucket_pairs_expr(
     return f"flatten(transform({arr}, (x, i) -> transform({inner}, y -> {body})))"
 
 
+def capped_buckets(
+    rows: DataFrame,
+    keys: list[str],
+    members: Column,
+    max_bucket: int,
+    unit: str,
+    registry: Recent,
+) -> DataFrame:
+    """Group `rows` by `keys` and return (keys..., members) rows, one per
+    bucket with at least two members: the `members` aggregate (collect_set
+    or collect_list of ids or structs) sorted, then sliced to its first
+    `max_bucket` entries. ONE definition of the hot-bucket cap for every
+    bucketed near-dup tier; the `members` column feeds
+    in_bucket_pairs_expr.
+
+    The cap exists because in-bucket pair generation builds the O(k²)
+    pair array in ONE row's memory before the explode, so a degenerate
+    bucket (100k near-identical docs in one band) would OOM an executor
+    where a self-join streamed. A bucket that large is an exact-duplicate
+    mass that belongs to exact_dedup (run it first; curate_corpus does),
+    and every standard LSH deployment caps or salts hot buckets the same
+    way. The cap never triggers on the registry fixtures, so the join-form
+    DuckDB oracles (no cap) stay value-exact.
+
+    The cap is never silent: an Observation on the full bucket frame,
+    registered in `registry`, reports `capped_{unit}s` (buckets sliced),
+    `max_{unit}_size` and `n_{unit}s` once the result has executed."""
+    obs = Observation()
+    registry.add(obs)
+    return (
+        rows.groupBy(*keys)
+        .agg(F.array_sort(members).alias("full"))
+        .observe(
+            obs,
+            F.sum((F.size("full") > max_bucket).cast("long")).alias(f"capped_{unit}s"),
+            F.max(F.size("full")).alias(f"max_{unit}_size"),
+            F.count(F.lit(1)).alias(f"n_{unit}s"),
+        )
+        .select(*keys, F.slice("full", 1, max_bucket).alias("members"))
+        .filter(F.size("members") > 1)
+    )
+
+
 # Bounded FIFO of persisted frames from recent minhash invocations.
 # CacheManager holds strong references, so per-invocation persists would
 # otherwise leak for the session's lifetime (a 50-query driver loop
@@ -402,74 +423,32 @@ _PERSIST_KEEP = 4
 _PERSISTED: "collections.deque" = collections.deque()
 _PERSIST_LOCK = threading.Lock()
 
-# Observations attached to recent minhash_lsh_neardups bucket frames
-# (hot-bucket cap telemetry — the "no silent caps" rule), newest last, as
-# (build_id, Observation) so a reported dict carries WHICH invocation it
-# came from (review finding: an empty-input run whose CollectMetrics node
-# the optimizer eliminates would otherwise be silently confused with an
-# older run's telemetry).
-_MINHASH_OBS: "collections.deque" = collections.deque(maxlen=2 * _PERSIST_KEEP)
-_MINHASH_BUILDS = 0
-
-# Same pattern for exact_substr_dedup's k-gram aggregate (hot-gram skew
-# telemetry: how viral is the most-duplicated boilerplate span?).
-_EXACT_SUBSTR_OBS: "collections.deque" = collections.deque(maxlen=2 * _PERSIST_KEEP)
-_EXACT_SUBSTR_BUILDS = 0
-
-
-def newest_completed_metrics(observations: list) -> dict:
-    """Newest (build_id, Observation) whose metrics HAVE completed ->
-    metrics dict + `invocation` (the build id). Never blocks: probes via
-    the JVM Observation's getOrEmpty; on Spark Connect (no JVM handle) an
-    observation cannot be probed without blocking, so it is skipped.
-    Raises RuntimeError when nothing has completed. Note: a query whose
-    optimized plan ELIMINATES the metrics node (e.g. empty input folded
-    away by PropagateEmptyRelation) never completes its observation — the
-    `invocation` field is how callers detect they are reading an older
-    run."""
-    connect_skipped = 0
-    for build_id, obs in reversed(observations):
-        jo = getattr(obs, "_jo", None)
-        if jo is None:  # pragma: no cover - Connect: no non-blocking probe
-            connect_skipped += 1
-            continue
-        try:
-            jmap = jo.getOrEmpty()
-            if jmap.isEmpty():
-                continue
-            out = {str(k): jmap.apply(k) for k in _scala_keys(jmap)}
-            out["invocation"] = build_id
-            return out
-        except Exception:
-            continue
-    if connect_skipped:  # pragma: no cover - Connect path
-        # say WHY, not a misleading "never executed" (review finding): on
-        # Connect there is no non-blocking completion probe, so this getter
-        # cannot report without risking an indefinite block
-        raise RuntimeError(
-            "observation metrics cannot be probed non-blockingly on Spark"
-            " Connect; use Observation.get on a handle you know has executed"
-        )
-    raise RuntimeError("no completed observation to report on")
+# Telemetry of recent invocations, one registry per operator (see
+# core.telemetry.Recent): hot-bucket caps of minhash_lsh_neardups and
+# minhash_incremental, of simhash_neardup_pairs, and the hot-gram skew of
+# exact_substr_dedup's k-gram aggregate.
+_MINHASH = Recent(observed, "no executed minhash_lsh_neardups invocation to report on")
+_SIMHASH = Recent(observed, "no executed simhash_neardup_pairs invocation to report on")
+_EXACT_SUBSTR = Recent(observed, "no executed exact_substr_dedup invocation to report on")
 
 
 def last_minhash_metrics() -> dict:
-    """Hot-bucket telemetry for the newest `minhash_lsh_neardups`
-    invocation with COMPLETED metrics: `capped_buckets` (buckets whose
-    member list was sliced to max_bucket — each one a place where
-    candidate recall was deliberately traded for bounded executor memory),
-    `max_bucket_size`, `n_buckets`, and `invocation` (monotonic build id —
-    compare against consecutive calls to detect that a newer run's metrics
-    were optimizer-eliminated or not yet executed). Never blocks on a plan
-    that was built but not executed."""
-    with _PERSIST_LOCK:
-        candidates = list(_MINHASH_OBS)
-    try:
-        return newest_completed_metrics(candidates)
-    except RuntimeError:
-        raise RuntimeError(
-            "no executed minhash_lsh_neardups invocation to report on"
-        ) from None
+    """Hot-bucket telemetry for the newest `minhash_lsh_neardups` (or
+    `minhash_incremental`) invocation with COMPLETED metrics:
+    `capped_buckets` (buckets whose member list was sliced to max_bucket —
+    each one a place where candidate recall was deliberately traded for
+    bounded executor memory), `max_bucket_size`, `n_buckets`, and
+    `invocation` (monotonic build id — compare against consecutive calls to
+    detect that a newer run's metrics were optimizer-eliminated or not yet
+    executed). Never blocks on a plan that was built but not executed."""
+    return _MINHASH.newest()
+
+
+def last_simhash_metrics() -> dict:
+    """Hot-bucket telemetry for the newest `simhash_neardup_pairs`
+    invocation with COMPLETED metrics; same keys as
+    `last_minhash_metrics`. Never blocks."""
+    return _SIMHASH.newest()
 
 
 def last_exact_substr_metrics() -> dict:
@@ -479,22 +458,7 @@ def last_exact_substr_metrics() -> dict:
     would have single-partitioned), `dup_grams` (hashes occurring more than
     once), `n_grams` (distinct hashes), and `invocation` (monotonic build
     id, as in `last_minhash_metrics`). Never blocks."""
-    with _PERSIST_LOCK:
-        candidates = list(_EXACT_SUBSTR_OBS)
-    try:
-        return newest_completed_metrics(candidates)
-    except RuntimeError:
-        raise RuntimeError(
-            "no executed exact_substr_dedup invocation to report on"
-        ) from None
-
-
-def _scala_keys(jmap) -> list:
-    it = jmap.keysIterator()
-    keys = []
-    while it.hasNext():
-        keys.append(it.next())
-    return keys
+    return _EXACT_SUBSTR.newest()
 
 
 def _persist_tracked(frame: DataFrame) -> DataFrame:
@@ -555,37 +519,13 @@ def minhash_lsh_neardups(
         )
     )
     bands = minhash_bands_df(corpus_h, id_col, hashes_col="h")
-    # hot-bucket cap: in-bucket pair generation builds the O(k²) pair array
-    # in ONE row's memory before the explode, so a degenerate bucket (100k
-    # near-identical docs in one band) would OOM an executor where a
-    # self-join streamed. Buckets are sliced to the first max_bucket sorted
-    # ids — a bucket that large is an exact-duplicate mass that belongs to
-    # exact_dedup (run it first; curate_corpus does), and every standard
-    # LSH deployment caps or salts hot buckets the same way. The cap never
-    # triggers on the test fixtures, so the DuckDB oracle (join form, no
-    # cap) stays value-exact. When it DOES fire, that is recorded — never
-    # silent: an Observation on the bucket frame counts capped buckets and
-    # the largest bucket seen (read via `last_minhash_metrics()` after the
-    # first action on the result).
-    pairs = in_bucket_pairs_expr("ids", "struct(x AS a_id, y AS b_id)")
-    obs = Observation()
-    global _MINHASH_BUILDS
-    with _PERSIST_LOCK:
-        _MINHASH_BUILDS += 1
-        _MINHASH_OBS.append((_MINHASH_BUILDS, obs))
+    # capped buckets report through last_minhash_metrics()
+    pairs = in_bucket_pairs_expr("members", "struct(x AS a_id, y AS b_id)")
     cand = (
-        bands.groupBy("band_idx", "band_hash")
-        .agg(F.array_sort(F.collect_set(id_col)).alias("full_ids"))
-        .observe(
-            obs,
-            F.sum((F.size("full_ids") > max_bucket).cast("long")).alias(
-                "capped_buckets"
-            ),
-            F.max(F.size("full_ids")).alias("max_bucket_size"),
-            F.count(F.lit(1)).alias("n_buckets"),
+        capped_buckets(
+            bands, ["band_idx", "band_hash"], F.collect_set(id_col),
+            max_bucket, "bucket", _MINHASH,
         )
-        .select(F.slice("full_ids", 1, max_bucket).alias("ids"))
-        .filter(F.size("ids") > 1)
         .select(F.explode(F.expr(pairs)).alias("p"))
         .select(F.col("p.a_id"), F.col("p.b_id"))
         .distinct()
@@ -775,10 +715,11 @@ def minhash_incremental(
     Candidate generation: band rows are tagged `is_new`, bucketed together
     with the stored committed bands, and in-bucket i<j pairs are kept only
     when at least one member is new — committed-vs-committed pairs were
-    already found by the run that committed them. The hot-bucket cap and
-    its Observation telemetry match `minhash_lsh_neardups` (no silent
-    caps); the cap slices the same sorted-id prefix the full run would, so
-    cap behavior cannot differ between the full and incremental plans.
+    already found by the run that committed them. The hot-bucket cap is
+    the shared `capped_buckets`, reporting through `last_minhash_metrics`
+    like `minhash_lsh_neardups` (no silent caps); the cap slices the same
+    sorted-id prefix the full run would, so cap behavior cannot differ
+    between the full and incremental plans.
 
     Equivalence (tested): with monotone ids,
       minhash_lsh_neardups(A ∪ B) ≡ minhash_lsh_neardups(A)
@@ -799,32 +740,16 @@ def minhash_incremental(
     # first field, so the sliced prefix is the same id prefix the full run
     # caps to, independent of which side a member came from
     pairs = in_bucket_pairs_expr(
-        "ids",
+        "members",
         "struct(x.{id} AS a_id, y.{id} AS b_id,"
         " greatest(x.is_new, y.is_new) AS has_new)".format(id=id_col),
     )
-    obs = Observation()
-    global _MINHASH_BUILDS
-    with _PERSIST_LOCK:
-        _MINHASH_BUILDS += 1
-        _MINHASH_OBS.append((_MINHASH_BUILDS, obs))
     cand = (
-        bands.groupBy("band_idx", "band_hash")
-        .agg(
-            F.array_sort(
-                F.collect_set(F.struct(F.col(id_col), F.col("is_new")))
-            ).alias("full_ids")
+        capped_buckets(
+            bands, ["band_idx", "band_hash"],
+            F.collect_set(F.struct(F.col(id_col), F.col("is_new"))),
+            max_bucket, "bucket", _MINHASH,
         )
-        .observe(
-            obs,
-            F.sum((F.size("full_ids") > max_bucket).cast("long")).alias(
-                "capped_buckets"
-            ),
-            F.max(F.size("full_ids")).alias("max_bucket_size"),
-            F.count(F.lit(1)).alias("n_buckets"),
-        )
-        .select(F.slice("full_ids", 1, max_bucket).alias("ids"))
-        .filter(F.size("ids") > 1)
         .select(F.explode(F.expr(pairs)).alias("p"))
         .filter(F.col("p.has_new") == 1)
         # guard the documented append-only contract: an id present in BOTH
@@ -962,10 +887,8 @@ def simhash_neardup_pairs(
     per-word-md5 + 60-vote signature pipeline — the dominant cost — ran
     once PER JOIN SIDE. One groupBy on the band key keeps it to a single
     pass and a single shuffle. Buckets are capped at max_bucket sorted
-    members before the O(k²) in-row pair array is built — a degenerate
-    bucket (mass-duplicated boilerplate) would otherwise OOM an executor;
-    see minhash_lsh_neardups for the full rationale (cap never triggers on
-    the fixtures, so the join-form oracle stays value-exact)."""
+    members before the O(k²) in-row pair array is built (`capped_buckets`);
+    capped buckets report through `last_simhash_metrics()`."""
     bands = simhash_bands_df(df, id_col)
     # the hamming gate is applied INSIDE the pair lambda (keep=), before
     # any pair struct exists: at sf1.0 the buckets hold 54.6M raw i<j
@@ -984,21 +907,11 @@ def simhash_neardup_pairs(
     # (measured; same disease and fix as lsh_neardups)
     par = bands.sparkSession.sparkContext.defaultParallelism
     return (
-        bands.groupBy("band_idx", "band_key")
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_set(
-                        F.struct(
-                            F.col(id_col).alias("id"), F.col("simhash").alias("sh")
-                        )
-                    )
-                ),
-                1,
-                max_bucket,
-            ).alias("members")
+        capped_buckets(
+            bands, ["band_idx", "band_key"],
+            F.collect_set(F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sh"))),
+            max_bucket, "bucket", _SIMHASH,
         )
-        .filter(F.size("members") > 1)
         .repartition(par, F.col("band_idx"), F.col("band_key"))
         .select(F.explode(F.expr(pairs)).alias("p"))
         .select("p.a_id", "p.b_id", "p.hamming")
@@ -1237,10 +1150,7 @@ def exact_substr_dedup(
     # (review finding: the unpersisted form doubled the dominant stage)
     grams = _persist_tracked(grams)
     obs = Observation()
-    global _EXACT_SUBSTR_BUILDS
-    with _PERSIST_LOCK:
-        _EXACT_SUBSTR_BUILDS += 1
-        _EXACT_SUBSTR_OBS.append((_EXACT_SUBSTR_BUILDS, obs))
+    _EXACT_SUBSTR.add(obs)
     dup_grams = (
         grams.groupBy("gh")
         .agg(

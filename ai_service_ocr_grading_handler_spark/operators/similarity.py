@@ -29,6 +29,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
+from ai_service_ocr_grading_handler_spark.core.telemetry import Recent, observed
+from ai_service_ocr_grading_handler_spark.operators.dedup import (
+    _persist_tracked,
+    capped_buckets,
+    in_bucket_pairs_expr,
+)
 
 EMB_DIM = 64
 LSH_PLANES = 16
@@ -186,6 +192,17 @@ NEARDUP_CORPUS_DUCK = """
 """
 
 
+# lsh_neardups' hot-bucket telemetry (see core.telemetry.Recent)
+_LSH = Recent(observed, "no executed lsh_neardups invocation to report on")
+
+
+def last_lsh_metrics() -> dict:
+    """Hot-bucket telemetry for the newest `lsh_neardups` invocation with
+    COMPLETED metrics: `capped_buckets`, `max_bucket_size`, `n_buckets`,
+    `invocation` (as in `dedup.last_minhash_metrics`). Never blocks."""
+    return _LSH.newest()
+
+
 def lsh_neardups(
     df: DataFrame, threshold: float = 0.9, max_bucket: int = 1000
 ) -> DataFrame:
@@ -208,12 +225,8 @@ def lsh_neardups(
 
     Buckets are still capped at max_bucket sorted members (the sort key
     was (vec_id, embedding); vec_id is unique, so sorting ids alone keeps
-    the exact same survivor set)."""
-    from ai_service_ocr_grading_handler_spark.operators.dedup import (
-        _persist_tracked,
-        in_bucket_pairs_expr,
-    )
-
+    the exact same survivor set); capped buckets report through
+    `last_lsh_metrics()`."""
     # the P x dim signature fold is the dominant per-row cost: widen off
     # the single-split scan stage first (no-op on a wide input)
     df = widen_if_narrow(df, by=F.col("vec_id"))
@@ -233,7 +246,7 @@ def lsh_neardups(
     # three consumers (bucket groupBy + both join-back sides): persist so
     # the signature fold runs once (bounded-window eviction, see dedup)
     sigs = _persist_tracked(sigs)
-    pairs = in_bucket_pairs_expr("ids", "struct(x AS a_id, y AS b_id)")
+    pairs = in_bucket_pairs_expr("members", "struct(x AS a_id, y AS b_id)")
     # EXPLICIT-N repartitions around the explode: the bucket aggregate
     # emits only ~|buckets| tiny rows, so AQE's byte-based coalescing
     # collapses that shuffle to ONE partition and the k(k-1)/2 pair
@@ -246,9 +259,9 @@ def lsh_neardups(
     # id pairs — the §8 "move keys, not payloads" shape).
     par = sigs.sparkSession.sparkContext.defaultParallelism
     cand = (
-        sigs.groupBy("bucket")
-        .agg(F.slice(F.array_sort(F.collect_list("vec_id")), 1, max_bucket).alias("ids"))
-        .filter(F.size("ids") > 1)
+        capped_buckets(
+            sigs, ["bucket"], F.collect_list("vec_id"), max_bucket, "bucket", _LSH
+        )
         .repartition(par, F.col("bucket"))
         .select("bucket", F.explode(F.expr(pairs)).alias("p"))
         .select(F.col("p.a_id").alias("a_id"), F.col("p.b_id").alias("b_id"), "bucket")
@@ -358,11 +371,6 @@ def ivf_dots_duck(emb_expr: str, dim: int = EMB_DIM) -> str:
     return "[" + ", ".join(dots) + "]"
 
 
-def ivf_cell_col(dots_col: str = "dots") -> Column:
-    """Assigned cell = 1-based argmax of the dot array (first max on ties)."""
-    return F.expr(f"array_position({dots_col}, array_max({dots_col}))").cast("int")
-
-
 def ivf_probes_col(dots_col: str = "dots", nprobe: int = IVF_NPROBE) -> Column:
     """Cells to probe: every index whose dot >= the nprobe-th largest
     (ties may widen the probe set — identical semantics in the oracle)."""
@@ -428,29 +436,15 @@ def ivf_topk(
 
 # --- SemDeDup-style semantic dedup ----------------------------------------------
 
-import collections as _collections
-
-# (build_id, Observation) for semantic_dedup cell-cap telemetry — same
-# contract as dedup._MINHASH_OBS
-_SEMDEDUP_OBS: "_collections.deque" = _collections.deque(maxlen=8)
-_SEMDEDUP_BUILDS = 0
+# semantic_dedup's cell-cap telemetry (see core.telemetry.Recent)
+_SEMDEDUP = Recent(observed, "no executed semantic_dedup invocation to report on")
 
 
 def last_semantic_dedup_metrics() -> dict:
     """Cell-cap telemetry for the newest semantic_dedup invocation with
     COMPLETED metrics: `capped_cells`, `max_cell_size`, `n_cells`,
-    `invocation`. Never blocks (see dedup.newest_completed_metrics)."""
-    from ai_service_ocr_grading_handler_spark.operators import dedup as _dd
-
-    with _dd._PERSIST_LOCK:
-        candidates = list(_SEMDEDUP_OBS)
-    try:
-        return _dd.newest_completed_metrics(candidates)
-    except RuntimeError:
-        raise RuntimeError(
-            "no executed semantic_dedup invocation to report on"
-        ) from None
-
+    `invocation`. Never blocks."""
+    return _SEMDEDUP.newest()
 
 
 def semantic_dedup(
@@ -480,10 +474,6 @@ def semantic_dedup(
     The cap is never silent: an Observation counts capped cells and the
     largest cell (read via `last_semantic_dedup_metrics()` after an
     action) — same telemetry contract as minhash_lsh_neardups."""
-    from pyspark.sql import Observation
-
-    from ai_service_ocr_grading_handler_spark.operators import dedup as _dd
-
     # widen before the 16x64 quantizer fold (single-split scan otherwise);
     # `dots` is bound once via the array()/lambda hoist — the previous
     # two-Project form collapsed and evaluated the K-dot fold twice per row
@@ -499,30 +489,14 @@ def semantic_dedup(
     # anti-join; without a materialization the 16x64 quantizer fold runs
     # once per consumer (verified in the executed plan — the round-2
     # ReusedExchange lesson). Persist through the shared bounded window.
-    cells = _dd._persist_tracked(cells)
-    pairs = _dd.in_bucket_pairs_expr("vs")
-    obs = Observation()
-    global _SEMDEDUP_BUILDS
-    with _dd._PERSIST_LOCK:
-        _SEMDEDUP_BUILDS += 1
-        _SEMDEDUP_OBS.append((_SEMDEDUP_BUILDS, obs))
+    cells = _persist_tracked(cells)
+    pairs = in_bucket_pairs_expr("members")
     dropped = (
-        cells.groupBy("cell")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("vec_id"), F.col("embedding")))
-            ).alias("full_vs")
+        capped_buckets(
+            cells, ["cell"],
+            F.collect_list(F.struct(F.col("vec_id"), F.col("embedding"))),
+            max_cell, "cell", _SEMDEDUP,
         )
-        .observe(
-            obs,
-            F.sum((F.size("full_vs") > max_cell).cast("long")).alias(
-                "capped_cells"
-            ),
-            F.max(F.size("full_vs")).alias("max_cell_size"),
-            F.count(F.lit(1)).alias("n_cells"),
-        )
-        .select(F.slice("full_vs", 1, max_cell).alias("vs"))
-        .filter(F.size("vs") > 1)
         .select(F.explode(F.expr(pairs)).alias("p"))
         .filter(
             cosine(F.col("p.a.embedding"), F.col("p.b.embedding")) > threshold

@@ -39,15 +39,15 @@ archive ingestion per the north rule instead of per-row network calls.
 
 from __future__ import annotations
 
-import collections
 import re
-import threading
 import warnings
 import zlib
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ai_service_ocr_grading_handler_spark.core.telemetry import Recent
 
 # Bomb bounds: per-RECORD payload cap (a crawl record is capped far below
 # this in practice — CC truncates at 1 MiB) and a header-region cap. The
@@ -74,12 +74,12 @@ DROP_REASONS = (
 )
 
 
-# (build_id, {reason: Accumulator}) for recent warc_pages plans, newest
-# last — same registry shape as dedup._MINHASH_OBS so stale reads are
-# detectable by invocation id.
-_WARC_DROP_ACCS: "collections.deque" = collections.deque(maxlen=8)
-_WARC_BUILDS = 0
-_WARC_ACC_LOCK = threading.Lock()
+# {reason: Accumulator} of recent warc_pages plans; the newest is read as
+# is (see last_warc_drop_metrics)
+_WARC_DROPS = Recent(
+    lambda accs: {r: a.value for r, a in accs.items()},
+    "no warc_pages invocation to report on",
+)
 
 
 def _bump(counters, reason: str, n: int = 1) -> None:
@@ -510,15 +510,12 @@ def _make_drop_accumulators(spark: SparkSession):
     accumulator support there — the kernel then counts locally but
     cannot surface; classic mode, which every deployment here uses,
     gets full telemetry)."""
-    global _WARC_BUILDS
     try:
         sc = spark.sparkContext
         accs = {r: sc.accumulator(0) for r in DROP_REASONS}
     except Exception:  # pragma: no cover - Connect: no sparkContext
         return None
-    with _WARC_ACC_LOCK:
-        _WARC_BUILDS += 1
-        _WARC_DROP_ACCS.append((_WARC_BUILDS, accs))
+    _WARC_DROPS.add(accs)
     return accs
 
 
@@ -528,13 +525,7 @@ def last_warc_drop_metrics() -> dict:
     the Observation getters there is no completion probe, so a plan built
     but never executed reports zeros). Keys = `DROP_REASONS` +
     `invocation` (monotonic build id, as in `last_minhash_metrics`)."""
-    with _WARC_ACC_LOCK:
-        if not _WARC_DROP_ACCS:
-            raise RuntimeError("no warc_pages invocation to report on")
-        build_id, accs = _WARC_DROP_ACCS[-1]
-    out = {r: a.value for r, a in accs.items()}
-    out["invocation"] = build_id
-    return out
+    return _WARC_DROPS.newest()
 
 
 def warc_pages(files_df: DataFrame) -> DataFrame:

@@ -4,6 +4,7 @@ Hamming bounds, LSH ANN finding planted duplicates, lang-ID on real scripts."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from ai_service_ocr_grading_handler_spark.operators import dedup, similarity, textquality
 
@@ -128,38 +129,78 @@ def test_decontaminate_drops_benchmark_overlaps(spark):
     assert again == kept
 
 
-def test_minhash_hot_bucket_cap_is_observable(spark):
-    """Forcing the hot-bucket cap (max_bucket=2 over near-identical docs)
-    must surface in last_minhash_metrics() — truncation is never silent
-    (judge finding: 'no silent caps')."""
+def _near_identical_docs(spark):
     base = " ".join(f"w{i}" for i in range(40))
     rows = [(i, base + f" tail{i % 2}") for i in range(12)]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = dedup.minhash_lsh_neardups(df, threshold=0.5, max_bucket=2)
-    out.count()  # action completes the observed query
-    m = dedup.last_minhash_metrics()
-    assert m["capped_buckets"] > 0
-    assert m["max_bucket_size"] > 2
-    assert m["n_buckets"] >= m["capped_buckets"]
-    # and with the cap wide open, the same corpus reports zero capped
-    dedup.minhash_lsh_neardups(df, threshold=0.5, max_bucket=1000).count()
-    assert dedup.last_minhash_metrics()["capped_buckets"] == 0
+    return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-def test_semantic_dedup_cell_cap_is_observable(spark):
-    """The max_cell slice must surface in telemetry when it fires — same
-    no-silent-caps contract as minhash (review finding)."""
-    from ai_service_ocr_grading_handler_spark.operators import similarity as sim
+def _near_identical_vecs(spark):
+    rows = [(i, [0.5 + (i % 2) * 1e-6] * 64) for i in range(12)]
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
 
-    base = [0.5] * 64
-    rows = [(i, [v + (i % 2) * 1e-6 for v in base]) for i in range(10)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    sim.semantic_dedup(df, max_cell=3).count()
-    m = sim.last_semantic_dedup_metrics()
-    assert m["capped_cells"] > 0 and m["max_cell_size"] > 3
-    sim.semantic_dedup(df, max_cell=100).count()
-    m2 = sim.last_semantic_dedup_metrics()
-    assert m2["capped_cells"] == 0 and m2["invocation"] > m["invocation"]
+
+# operator name -> (run(spark, cap) -> result frame, metrics getter, unit)
+_CAPPED_TIERS = {
+    "minhash_lsh_neardups": (
+        lambda spark, cap: dedup.minhash_lsh_neardups(
+            _near_identical_docs(spark), threshold=0.5, max_bucket=cap
+        ),
+        dedup.last_minhash_metrics,
+        "bucket",
+    ),
+    "minhash_incremental": (
+        # one committed doc, so the capped id prefix still holds a new doc:
+        # an empty result lets AQE drop the metrics node before it reports
+        lambda spark, cap: dedup.minhash_incremental(
+            _near_identical_docs(spark).filter(F.col("doc_id") >= 1),
+            _near_identical_docs(spark).filter(F.col("doc_id") < 1),
+            threshold=0.5,
+            max_bucket=cap,
+        ),
+        dedup.last_minhash_metrics,
+        "bucket",
+    ),
+    "simhash_neardup_pairs": (
+        lambda spark, cap: dedup.simhash_neardup_pairs(
+            _near_identical_docs(spark), max_bucket=cap
+        ),
+        dedup.last_simhash_metrics,
+        "bucket",
+    ),
+    "lsh_neardups": (
+        lambda spark, cap: similarity.lsh_neardups(
+            _near_identical_vecs(spark), max_bucket=cap
+        ),
+        similarity.last_lsh_metrics,
+        "bucket",
+    ),
+    "semantic_dedup": (
+        lambda spark, cap: similarity.semantic_dedup(
+            _near_identical_vecs(spark), max_cell=cap
+        ),
+        similarity.last_semantic_dedup_metrics,
+        "cell",
+    ),
+}
+
+
+@pytest.mark.parametrize("tier", sorted(_CAPPED_TIERS))
+def test_hot_bucket_cap_is_observable(spark, tier):
+    """Forcing the hot-bucket cap (max_bucket=2 over near-identical rows)
+    must surface in the tier's metrics getter — truncation is never
+    silent; with the cap wide open the same input reports zero capped,
+    under a newer invocation id."""
+    run, metrics, unit = _CAPPED_TIERS[tier]
+    run(spark, 2).count()  # action completes the observed query
+    m = metrics()
+    assert m[f"capped_{unit}s"] > 0
+    assert m[f"max_{unit}_size"] > 2
+    assert m[f"n_{unit}s"] >= m[f"capped_{unit}s"]
+    run(spark, 1000).count()
+    m2 = metrics()
+    assert m2[f"capped_{unit}s"] == 0
+    assert m2["invocation"] > m["invocation"]
 
 
 def test_semantic_dedup_drops_planted_copies_keeps_originals(spark):
