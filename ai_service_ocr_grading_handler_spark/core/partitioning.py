@@ -20,6 +20,9 @@ the whole machine.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 
@@ -53,3 +56,34 @@ def widen_if_narrow(
     if cur >= par:
         return df
     return df.repartition(par) if by is None else df.repartition(par, by)
+
+
+def shared_by(
+    df: DataFrame,
+    key: str,
+    compute: Callable[[DataFrame], DataFrame],
+    probe: DataFrame | None = None,
+) -> DataFrame:
+    """`compute(df)`, widened off a narrow scan first, ending in a hash
+    exchange on `key`: the shape that lets every branch of one plan that
+    reads the result share it. AQE runs the subtree below that exchange
+    once per action and hands the other branches a ReusedExchange — no
+    cache, so nothing outlives the action.
+
+    Reuse needs every branch to plan the exchange identically, which
+    holds only if
+    (1) the widening exchange is keyless: a hash exchange on `key` below
+        would make the trailing one redundant, and EnsureRequirements
+        would drop it;
+    (2) no branch pushes a filter below the exchange: rows with a NULL
+        `key` are dropped here, so the isnotnull that a join on `key`
+        infers is already implied;
+    (3) every branch reads the same columns and none pushes a semi- or
+        anti-join through the exchange (Catalyst moves both below it) —
+        the caller's part.
+    The exchange has an explicit partition count, so AQE does not
+    coalesce it and the work above it keeps every task slot.
+    ``probe``: as in widen_if_narrow."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    wide = widen_if_narrow(df.filter(F.col(key).isNotNull()), probe=probe)
+    return compute(wide).repartition(par, F.col(key))

@@ -36,13 +36,13 @@ across partitionings and resumable runs.
 
 from __future__ import annotations
 
-import collections
-import threading
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
-from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
+from ai_service_ocr_grading_handler_spark.core.partitioning import (
+    shared_by,
+    widen_if_narrow,
+)
 from ai_service_ocr_grading_handler_spark.core.telemetry import Recent, observed
 
 # --- corpus with planted duplicates ------------------------------------------
@@ -272,8 +272,8 @@ def minhash_bands_df(
 
     ``hashes_col``: name of a precomputed 60-bit shingle-hash ARRAY column
     on `df` (the round-6 one-md5-pass path: minhash_lsh_neardups computes
-    (id, h60) once, persisted, and both the banding below and the
-    candidate verification read it — the shingle+md5 chain used to run
+    (id, h60) once, behind an exchange that both the banding below and
+    the candidate verification reuse — the shingle+md5 chain used to run
     twice, once here and once re-shingling candidates in the verify).
     When None, `df` must carry `text` and the chain is computed inline.
 
@@ -327,7 +327,7 @@ def minhash_bands_df(
         rep = widen_if_narrow(df.select(F.col(id_col), "text"), by=F.col(id_col))
     else:
         h31_src = f"transform({hashes_col}, x -> x % {_MERSENNE31})"
-        rep = df  # caller already widened/persisted the hash frame
+        rep = df  # caller already widened and exchanged the hash frame
     fused = (
         f"element_at(transform(array({h31_src}), hs ->"
         f" CASE WHEN size(hs) = 0 THEN cast(array() as array<bigint>)"
@@ -406,23 +406,6 @@ def capped_buckets(
     )
 
 
-# Bounded FIFO of persisted frames from recent minhash invocations.
-# CacheManager holds strong references, so per-invocation persists would
-# otherwise leak for the session's lifetime (a 50-query driver loop
-# accumulates two cache entries per call — found by review). Evicting the
-# *previous* call's frames at plan-BUILD time was worse: building a second
-# plan before executing the first stripped the first plan's persist (the
-# signature pipeline then silently recomputed once per consumer), and the
-# module global was not thread-safe. Now: a lock-guarded deque keeps the
-# last _PERSIST_KEEP invocations' frames live (2 frames each), so
-# interleaved build-then-execute patterns — including concurrent threads —
-# keep their persists as long as no more than _PERSIST_KEEP further
-# invocations intervene before execution; memory stays bounded at
-# 2×_PERSIST_KEEP cache entries either way.
-_PERSIST_KEEP = 4
-_PERSISTED: "collections.deque" = collections.deque()
-_PERSIST_LOCK = threading.Lock()
-
 # Telemetry of recent invocations, one registry per operator (see
 # core.telemetry.Recent): hot-bucket caps of minhash_lsh_neardups and
 # minhash_incremental, of simhash_neardup_pairs, and the hot-gram skew of
@@ -461,20 +444,6 @@ def last_exact_substr_metrics() -> dict:
     return _EXACT_SUBSTR.newest()
 
 
-def _persist_tracked(frame: DataFrame) -> DataFrame:
-    """Persist `frame` and enqueue it in the bounded eviction window."""
-    frame = frame.persist()
-    with _PERSIST_LOCK:
-        _PERSISTED.append(frame)
-        while len(_PERSISTED) > 2 * _PERSIST_KEEP:
-            stale = _PERSISTED.popleft()
-            try:
-                stale.unpersist(blocking=False)
-            except Exception:
-                pass
-    return frame
-
-
 def minhash_lsh_neardups(
     df: DataFrame,
     threshold: float = 0.6,
@@ -489,14 +458,14 @@ def minhash_lsh_neardups(
        bucket (sorted ids, capped at max_bucket -> i<j struct explode):
        the signature pipeline runs once and there is no band self-join —
        one shuffle on band keys, cost ~ docs x bands + sum(bucket²);
-    3. exact-Jaccard verify restricted to candidate pairs: the corpus is
-       LEFT-SEMI-JOINED to the candidate id set BEFORE shingling, so only
-       candidate documents are ever shingled, and the verification is a
-       per-pair array_intersect over md5-derived 60-bit shingle-hash arrays
-       — no explode, no shingle self-join (the quadratic baseline
+    3. exact-Jaccard verify restricted to candidate pairs: the shared
+       shingle-hash frame is narrowed to the candidate id set (a join on
+       the distinct ids), and the verification is a per-pair
+       array_intersect over md5-derived 60-bit shingle-hash arrays — no
+       explode, no shingle self-join (the quadratic baseline
        `jaccard_pairs` exists only as the correctness oracle). At 100 TB
        candidates are ~the duplicate mass, orders of magnitude below the
-       corpus; this semi-join keeps the verify stage sublinear.
+       corpus; this narrowing keeps the verify joins sublinear.
     Output == `jaccard_pairs` restricted to LSH candidates; on corpora where
     LSH recall is 1 (tested), equal to the exact result.
 
@@ -509,14 +478,15 @@ def minhash_lsh_neardups(
     what makes every signature bit value-checkable in DuckDB.
     """
     # ONE shingle+md5 pass for the whole query (round 6): the 60-bit
-    # shingle-hash frame is computed once (widened off a narrow scan),
-    # persisted, and consumed by BOTH the banding (h31 = h60 % M) and the
-    # candidate verification — the round-5 shape re-tokenized and
-    # re-hashed every candidate document a second time in the verify.
-    corpus_h = _persist_tracked(
-        widen_if_narrow(df.select(F.col(id_col), "text"), by=F.col(id_col)).select(
-            F.col(id_col), F.expr(_SHINGLE_H60_SPARK).alias("h")
-        )
+    # shingle-hash frame is read by BOTH the banding (h31 = h60 % M) and
+    # the candidate verification. It ends in an exchange on the id the
+    # verify joins on, which every branch plans identically, so AQE runs
+    # the hashing once per action and reuses the exchange (see
+    # shared_by for what keeps the branches identical).
+    corpus_h = shared_by(
+        df.select(F.col(id_col), "text"),
+        id_col,
+        lambda d: d.select(F.col(id_col), F.expr(_SHINGLE_H60_SPARK).alias("h")),
     )
     bands = minhash_bands_df(corpus_h, id_col, hashes_col="h")
     # capped buckets report through last_minhash_metrics()
@@ -546,37 +516,40 @@ def _verify_candidate_pairs(
     requires the two verify stages to stay value-identical (review
     finding: this block was duplicated).
 
-    The corpus is LEFT-SEMI-JOINED to the candidate id set BEFORE
-    shingling (only candidate docs are ever shingled), and per-doc
+    Without precomputed hashes (`harr_all`) the corpus is joined to the
+    distinct candidate ids BEFORE shingling (only candidate docs are ever
+    shingled). Per-doc
     DISTINCT shingle-hash arrays (shingles_col is array_distinct'd; h60 is
     collision-free at these cardinalities) are kept AS ARRAYS: the verify
     is a per-pair array_intersect fold, so the shuffle carries one array
     per candidate doc and nothing is exploded."""
-    # consumed twice (candidate-id frontier + verify); persist so the
-    # signature pipeline runs once (bounded-window eviction, see _PERSISTED)
-    cand = _persist_tracked(cand)
+    # `cand` is read by the candidate-id frontier and by the verify. The
+    # signature pipeline sits below its bucket aggregate's exchange, which
+    # every reader plans identically (filters the joins infer stop at the
+    # pair explode above it), so AQE runs it once per action.
     cand_ids = (
         cand.select(F.col("a_id").alias(id_col))
         .union(cand.select(F.col("b_id").alias(id_col)))
         .distinct()
     )
+    # Narrowing to the candidates is an inner join on the distinct ids,
+    # not a left_semi: Catalyst pushes a semi-join below exchanges and into
+    # union branches, and the filters it infers there give the readers of
+    # `cand` (and of the hash frame) different, unshared exchanges.
     if harr_all is not None:
-        # hashes precomputed (and persisted) by the caller: the verify is
-        # a cheap semi-join of the cached hash frame — no re-shingling.
-        # Not re-persisted: both join branches read the broadcast-semi
-        # filter straight off the cached frame.
-        harr = harr_all.join(cand_ids, id_col, "left_semi")
+        # hashes precomputed by the caller behind a shared exchange — no
+        # re-shingling
+        harr = harr_all.join(cand_ids, id_col)
     else:
         # the shingle+md5 of candidate docs is the expensive part of the
         # verify: widen it off the (single-split at bench scale) scan
         # stage — probe the corpus scan, never the broadcast-join plan
-        # (see widen_if_narrow)
-        harr = _persist_tracked(
-            widen_if_narrow(
-                corpus.join(cand_ids, id_col, "left_semi"),
-                by=F.col(id_col),
-                probe=corpus,
-            ).select(F.col(id_col), F.expr(_SHINGLE_H60_SPARK).alias("h"))
+        # (see widen_if_narrow) — and share it between both join sides
+        harr = shared_by(
+            corpus.join(cand_ids, id_col),
+            id_col,
+            lambda d: d.select(F.col(id_col), F.expr(_SHINGLE_H60_SPARK).alias("h")),
+            probe=corpus,
         )
     return (
         cand.join(
@@ -1094,23 +1067,21 @@ def exact_substr_dedup(
     1. grams: per doc, md5 of each of the n-k+1 consecutive k-word windows,
        built NATIVELY from the word array (transform over a start-index
        sequence + slice) — zero shuffle, no explode of the words themselves.
-    2. the gram triples are persisted (tracked eviction window), computed
-       ONCE, then shuffled on the gram hash carrying only (id, pos, gh)
-       (the gram text never crosses the wire): `groupBy(gh)` with
-       map-side partial aggregation yields per-hash occurrence count and
-       the keeper `min(struct(id, pos))`; occurrences join back on gh and
-       every row that is not the keeper of a cnt>1 hash is a removal.
-       This shuffle is the inherent ExactSubstr cost — O(total words)
-       fixed-width rows, the same volume MinHash shuffles per band.
+    2. the gram triples are shuffled ONCE on the gram hash, carrying only
+       (id, pos, gh) (the gram text never crosses the wire). Both the
+       occurrence aggregate and the join-back read that one exchange, so
+       AQE computes the gram stream once per action and reuses it:
+       `groupBy(gh)` yields per-hash occurrence count and the keeper
+       `min(struct(id, pos))` with no further shuffle; occurrences join
+       back on gh and every row that is not the keeper of a cnt>1 hash is
+       a removal. This shuffle is the inherent ExactSubstr cost — O(total
+       words) fixed-width rows, the same volume MinHash shuffles per band.
        Deliberately NOT a `Window.partitionBy(gh)` rank: a viral
        boilerplate k-gram (exactly the workload this operator exists for)
        would put millions of occurrences of one hash into a single window
-       partition for the sort. The groupBy form partial-aggregates the hot
-       key on the map side (one row per map task crosses the wire), and
-       the join-back is skew-safe: when the duplicated-gram table is small
-       AQE broadcasts it (grams never reshuffles at all), and when it is
-       not, AQE skew-join splits the hot gh partition — neither escape
-       hatch exists for a window. Telemetry: an Observation on the
+       partition for the sort. The hash aggregate streams the hot key
+       without sorting it, and when the duplicated-gram table is small
+       AQE broadcasts it to the join. Telemetry: an Observation on the
        aggregate reports `max_gram_occurrences` / `dup_grams` / `n_grams`
        (`last_exact_substr_metrics()`), so a 100 TB run can see its
        boilerplate skew instead of discovering it as a straggler.
@@ -1143,12 +1114,15 @@ def exact_substr_dedup(
         )
     )
     # grams feeds BOTH the occurrence aggregate and the join probe side:
-    # persist it (tracked, bounded eviction) so the explode + per-window
-    # slice + md5 over every corpus word executes once, not once per
-    # branch — and in the non-broadcast AQE path the probe side re-reads
-    # cached fixed-width triples instead of recomputing the gram stream
-    # (review finding: the unpersisted form doubled the dominant stage)
-    grams = _persist_tracked(grams)
+    # end it in the exchange on gh they both need, so the explode +
+    # per-window slice + md5 over every corpus word executes once, not
+    # once per branch (without a shared exchange it doubled the dominant
+    # stage). NULL-id rows go first: the reassembly join infers
+    # isnotnull(id), which would otherwise reach below the exchange in
+    # the probe branch only and split it in two.
+    grams = grams.filter(F.col(id_col).isNotNull()).repartition(
+        df.sparkSession.sparkContext.defaultParallelism, F.col("gh")
+    )
     obs = Observation()
     _EXACT_SUBSTR.add(obs)
     dup_grams = (

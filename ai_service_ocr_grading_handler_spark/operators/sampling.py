@@ -203,9 +203,29 @@ def _features(df: DataFrame, id_cols: list[str], text_col: str, buckets: int) ->
         "(" + _bucket_expr_spark(n, buckets) + ")" for n in _DSIR_GRAMS
     )
     ws = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    # buckets are never NULL; the explicit test keeps the isnotnull a
+    # bucket join infers out of only some branches, so every reader of
+    # one feature frame plans the same exchange and AQE reuses it
     return (
         df.select(*id_cols, ws.alias("ws"))
         .select(*id_cols, F.explode(F.expr(feats)).alias("bucket"))
+        .filter(F.col("bucket").isNotNull())
+    )
+
+
+def _doc_bucket_counts(
+    corpus: DataFrame, id_col: str, text_col: str, buckets: int
+) -> DataFrame:
+    """(id, bucket, n_occ) occurrence counts of the corpus features. Both
+    the raw-distribution fit and the per-doc weight read this frame, so it
+    ends in an exchange on the id the weight aggregate groups by: AQE then
+    tokenizes and hashes the corpus once per action and reuses that
+    exchange in both branches."""
+    return (
+        _features(corpus, [id_col], text_col, buckets)
+        .groupBy(id_col, "bucket")
+        .agg(F.count(F.lit(1)).alias("n_occ"))
+        .repartition(corpus.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
     )
 
 
@@ -270,10 +290,10 @@ def dsir_select(
     Output: (id, log_weight, gumbel_key) for the k selected docs. Docs
     with no non-empty tokens never enter the feature frame and cannot be
     selected. The corpus is tokenized+hashed ONCE: features are
-    pre-aggregated to per-(doc, bucket) occurrence counts, persisted
-    (tracked eviction window), and both the raw-distribution fit and the
-    weight join read that frame — at 100 TB the dominant cost is that
-    single pass, not two. An EMPTY target slice fails fast at execution
+    pre-aggregated to per-(doc, bucket) occurrence counts behind one
+    exchange on the doc id, and both the raw-distribution fit and the
+    weight join reuse it — at 100 TB the dominant cost is that single
+    pass, not two. An EMPTY target slice fails fast at execution
     (assert_true) instead of silently producing NULL weights and an
     arbitrary, engine-divergent selection. Keys are rounded to 6dp
     BEFORE the top-k with a doc-id tie-break (the module's
@@ -283,15 +303,7 @@ def dsir_select(
     Measured (round 4, sf0.1, local[32], min-of-3): 1.85 s to fit both
     multinomials over 5k docs x 4096 buckets and select k=100.
     """
-    from ai_service_ocr_grading_handler_spark.operators.dedup import (
-        _persist_tracked,
-    )
-
-    docb = _persist_tracked(
-        _features(corpus, [id_col], text_col, buckets)
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-    )
+    docb = _doc_bucket_counts(corpus, id_col, text_col, buckets)
     ratio = _logratio_table(
         docb, _features(target, [], text_col, buckets), buckets, alpha,
         "dsir: empty target slice",
@@ -399,15 +411,7 @@ def quality_classifier(
     (shared `_features`), two tiny count tables, a broadcast ratio join
     (≤ `buckets` rows), one per-doc aggregate — no corpus shuffle beyond
     the per-(doc,bucket) combine."""
-    from ai_service_ocr_grading_handler_spark.operators.dedup import (
-        _persist_tracked,
-    )
-
-    docb = _persist_tracked(
-        _features(corpus, [id_col], text_col, buckets)
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-    )
+    docb = _doc_bucket_counts(corpus, id_col, text_col, buckets)
     ratio = _logratio_table(
         docb, _features(reference, [], text_col, buckets), buckets, alpha,
         "quality_classifier: empty reference slice",

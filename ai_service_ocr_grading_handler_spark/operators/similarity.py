@@ -31,7 +31,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
 from ai_service_ocr_grading_handler_spark.core.telemetry import Recent, observed
 from ai_service_ocr_grading_handler_spark.operators.dedup import (
-    _persist_tracked,
     capped_buckets,
     in_bucket_pairs_expr,
 )
@@ -217,7 +216,7 @@ def lsh_neardups(
     92 buckets yield 5.9M candidate pairs; the old embedded-pair form
     allocated ~3 GB of short-lived structs and evaluated the interpreted
     3-fold cosine per pair, ~10 s). The embeddings and their precomputed
-    norms attach via two joins on the persisted signature frame, and the
+    norms attach via two joins on the signature frame, and the
     per-pair work drops to ONE flat codegen dot product + a multiply:
     sqrt(dot(a,a)) moves from per-pair to per-vector — the identical
     expression on the identical input, so every cosine bit matches the
@@ -228,8 +227,13 @@ def lsh_neardups(
     the exact same survivor set); capped buckets report through
     `last_lsh_metrics()`."""
     # the P x dim signature fold is the dominant per-row cost: widen off
-    # the single-split scan stage first (no-op on a wide input)
-    df = widen_if_narrow(df, by=F.col("vec_id"))
+    # the single-split scan stage first (no-op on a wide input). The
+    # bucket branch reads (vec_id, bucket) and the join-back branches
+    # (vec_id, embedding, nrm), so column pruning confines the fold to the
+    # bucket branch. Dropping NULL ids up front (collect_list and the
+    # joins skip them anyway) keeps the joins' inferred isnotnull out of
+    # the bucket branch, so all branches reuse the widening exchange.
+    df = widen_if_narrow(df.filter(F.col("vec_id").isNotNull()), by=F.col("vec_id"))
     # fold-form self-dot for the norm (same bits as the flat form: the
     # fold's 0.0D seed + t0 == t0; see the pair-dot note below)
     self_dot = F.expr(
@@ -243,9 +247,6 @@ def lsh_neardups(
         F.sqrt(self_dot).alias("nrm"),
         lsh_bucket_col().alias("bucket"),
     )
-    # three consumers (bucket groupBy + both join-back sides): persist so
-    # the signature fold runs once (bounded-window eviction, see dedup)
-    sigs = _persist_tracked(sigs)
     pairs = in_bucket_pairs_expr("members", "struct(x AS a_id, y AS b_id)")
     # EXPLICIT-N repartitions around the explode: the bucket aggregate
     # emits only ~|buckets| tiny rows, so AQE's byte-based coalescing
@@ -257,7 +258,7 @@ def lsh_neardups(
     # GENERATION; a second one on (a_id, b_id) after it balances pair
     # VERIFICATION regardless of bucket skew (the shuffle carries 24-byte
     # id pairs — the §8 "move keys, not payloads" shape).
-    par = sigs.sparkSession.sparkContext.defaultParallelism
+    par = df.sparkSession.sparkContext.defaultParallelism
     cand = (
         capped_buckets(
             sigs, ["bucket"], F.collect_list("vec_id"), max_bucket, "bucket", _LSH
@@ -360,6 +361,16 @@ def ivf_dots_expr(emb_col: str = "embedding") -> str:
     return "array(" + ", ".join(dots) + ")"
 
 
+# cell = argmax of the K-centroid dots, 1-based. `dots` is bound once via
+# the array()/lambda hoist: a two-Project form collapses and evaluates the
+# K-dot fold twice per row (once under array_position, once under
+# array_max).
+_IVF_CELL_SPARK = (
+    f"element_at(transform(array({ivf_dots_expr('embedding')}),"
+    f" dots -> cast(array_position(dots, array_max(dots)) as int)), 1)"
+)
+
+
 def ivf_dots_duck(emb_expr: str, dim: int = EMB_DIM) -> str:
     dots = [
         (
@@ -391,18 +402,14 @@ def ivf_topk(
     K-dot array is computed once), probe NPROBE cells per query, exact
     cosine top-k within the probed lists only."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # corpus-side cell assignment fused into one projection (`dots` bound
-    # once via the lambda hoist) ABOVE a widen_if_narrow exchange: the
-    # former dots-then-repartition-then-cell form computed the 16x64
-    # quantizer fold inside the single-split scan stage
-    cell_expr = (
-        f"element_at(transform(array({ivf_dots_expr('embedding')}),"
-        f" dots -> cast(array_position(dots, array_max(dots)) as int)), 1)"
-    )
+    # corpus-side cell assignment fused into one projection ABOVE a
+    # widen_if_narrow exchange: the former dots-then-repartition-then-cell
+    # form computed the 16x64 quantizer fold inside the single-split scan
+    # stage
     corpus = widen_if_narrow(emb, by=F.col("vec_id")).select(
         F.col("vec_id").alias("n_id"),
         F.col("embedding").alias("n_emb"),
-        F.expr(cell_expr).alias("cell"),
+        F.expr(_IVF_CELL_SPARK).alias("cell"),
     )
     queries = (
         emb.filter(F.col("vec_id") < n_queries)
@@ -463,37 +470,39 @@ def semantic_dedup(
     byte-identically, and the whole survivor set is value-oracle-checkable
     as a single NOT EXISTS in DuckDB.
 
-    Plan shape at 100 TB: cell assignment is a per-row fold (scan speed),
-    ONE shuffle on the cell key, in-cell i<j pair generation over sorted
-    (id, embedding) structs (capped at max_cell like every bucketed tier —
-    an over-full cell means the quantizer needs more cells), cosine on
-    candidate pairs only, then a broadcast-able anti-join of the dropped
-    ids. Like SemDeDup itself, cross-cell near-dups are out of contract:
-    the quantizer is the recall/cost dial.
+    Plan shape at 100 TB: cell assignment is a per-row fold (scan speed)
+    whose (id, cell) output crosses ONE shuffle on the cell key, shared by
+    the grouping and the survivor join; embeddings join back on the id for
+    the grouping, in-cell i<j pair generation over sorted (id, embedding)
+    structs (capped at max_cell like every bucketed tier — an over-full
+    cell means the quantizer needs more cells), cosine on candidate pairs
+    only, then a broadcast-able left join of the dropped ids. Like
+    SemDeDup itself, cross-cell near-dups are out of contract: the
+    quantizer is the recall/cost dial.
 
     The cap is never silent: an Observation counts capped cells and the
     largest cell (read via `last_semantic_dedup_metrics()` after an
     action) — same telemetry contract as minhash_lsh_neardups."""
-    # widen before the 16x64 quantizer fold (single-split scan otherwise);
-    # `dots` is bound once via the array()/lambda hoist — the previous
-    # two-Project form collapsed and evaluated the K-dot fold twice per row
-    # (once under array_position, once under array_max)
-    cell_expr = (
-        f"element_at(transform(array({ivf_dots_expr('embedding')}),"
-        f" dots -> cast(array_position(dots, array_max(dots)) as int)), 1)"
+    # The 16x64 quantizer fold feeds BOTH the dropped-id derivation and
+    # the survivor join; without a shared exchange it runs once per
+    # consumer (the round-2 ReusedExchange lesson). So the fold runs
+    # above the widening exchange (single-split scan otherwise) and ends
+    # in an exchange on the cell the grouping needs, which both branches
+    # read with the same columns (see core.partitioning.shared_by for
+    # what keeps them identical): embeddings join back for the grouping
+    # only, the survivors come from a left join plus a NULL test rather
+    # than a left_anti (Catalyst would push that below the exchange), and
+    # vectors with a NULL id take no part.
+    cells = (
+        widen_if_narrow(df.filter(F.col("vec_id").isNotNull()), by=F.col("vec_id"))
+        .select("vec_id", F.expr(_IVF_CELL_SPARK).alias("cell"))
+        .repartition(df.sparkSession.sparkContext.defaultParallelism, F.col("cell"))
     )
-    cells = widen_if_narrow(df, by=F.col("vec_id")).select(
-        "vec_id", "embedding", F.expr(cell_expr).alias("cell")
-    )
-    # cells feeds BOTH the dropped-id derivation and the survivor
-    # anti-join; without a materialization the 16x64 quantizer fold runs
-    # once per consumer (verified in the executed plan — the round-2
-    # ReusedExchange lesson). Persist through the shared bounded window.
-    cells = _persist_tracked(cells)
+    members = cells.join(df.select("vec_id", "embedding"), "vec_id")
     pairs = in_bucket_pairs_expr("members")
     dropped = (
         capped_buckets(
-            cells, ["cell"],
+            members, ["cell"],
             F.collect_list(F.struct(F.col("vec_id"), F.col("embedding"))),
             max_cell, "cell", _SEMDEDUP,
         )
@@ -501,10 +510,11 @@ def semantic_dedup(
         .filter(
             cosine(F.col("p.a.embedding"), F.col("p.b.embedding")) > threshold
         )
-        .select(F.col("p.b.vec_id").alias("vec_id"))
+        .select(F.col("p.b.vec_id").alias("vec_id"), F.lit(True).alias("dropped"))
         .distinct()
     )
     return (
-        cells.join(dropped, "vec_id", "left_anti")
+        cells.join(dropped, "vec_id", "left")
+        .filter(F.col("dropped").isNull())
         .select("vec_id", "cell")
     )

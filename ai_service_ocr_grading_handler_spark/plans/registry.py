@@ -1229,15 +1229,13 @@ def q_lsh_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     without any all-pairs product. The output's `bucket` column IS the
     16-plane sign-LSH signature (deterministic Rademacher hyperplanes), so
     the bucketing stage is value-checked here too."""
-    # persist the (small) pair result before the global sort: the range
-    # partitioner's sampling pass re-executes the sort's child from the
-    # last materialized shuffle, which here is the whole 5.9M-candidate
-    # cosine verify — measured +2.2 s at sf1.0 for a 3k-row output.
-    # Bounded persist window, same as the operator's internal frames.
-    out = _dd._persist_tracked(
-        _sim.lsh_neardups(_sim.neardup_corpus(spark, sf_dir))
-    )
-    return out.orderBy("a_id", "b_id")
+    # exchange the (small) pair result on the sort key before the global
+    # sort: the range partitioner's sampling pass re-executes the sort's
+    # child from the last materialized shuffle, which would otherwise be
+    # the whole 5.9M-candidate cosine verify — measured +2.2 s at sf1.0
+    # for a 3k-row output.
+    out = _sim.lsh_neardups(_sim.neardup_corpus(spark, sf_dir))
+    return out.repartition("a_id", "b_id").orderBy("a_id", "b_id")
 
 
 @register(

@@ -251,9 +251,7 @@ def test_curation_tier_plan_shapes(spark):
     """The 100 TB-load-bearing shapes of the curation tier, asserted on the
     executed plans: decontaminate's benchmark side is BROADCAST (semi) and
     the survivor filter a broadcast anti — zero corpus shuffle;
-    pack_sequences shuffles exactly once (the group key); semantic_dedup's
-    quantizer-fold frame is persisted so the fold is not recomputed per
-    join branch (the round-2 ReusedExchange lesson)."""
+    pack_sequences shuffles exactly once (the group key)."""
     import re
 
     qs = _ALL_QUERIES
@@ -277,8 +275,36 @@ def test_curation_tier_plan_shapes(spark):
         f" group key)"
     )
 
-    plan = qs["semantic_dedup"](spark, SF)._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, "semantic_dedup cells frame lost its persist"
+
+# query -> text that occurs once per site computing its shared frame:
+# semantic_dedup's quantizer argmax, exact_substr_dedup's k-gram md5,
+# lsh_neardups' sign fold (its plane-15 term) and MinHash's shingle hash
+_SHARED_FRAME_SITES = {
+    "semantic_dedup": "array_position(",
+    "exact_substr_dedup": "md5(cast(concat_ws( , slice(ws",
+    "lsh_ann_neardups": "THEN 32768 ELSE 0",
+    "minhash_lsh_neardups": "array_distinct(transform(sequence(1",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SHARED_FRAME_SITES))
+def test_shared_frame_computed_once(spark, name):
+    """A frame that several branches of one query read is computed once
+    per action: its expensive projection appears at ONE site of the
+    executed (final adaptive) plan, and the other branches read it
+    through a ReusedExchange. The frames are not cached, so this sharing
+    is the plan's job — a pushed-down filter, a pruned column or a
+    redundant exchange that gives one branch its own copy fails here
+    (the round-2 ReusedExchange lesson)."""
+    df = _ALL_QUERIES[name](spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    marker = _SHARED_FRAME_SITES[name]
+    assert final.count(marker) == 1, (
+        f"{name}: shared frame computed at {final.count(marker)} sites"
+    )
+    assert "ReusedExchange" in final, f"{name}: no branch reuses an exchange"
 
 
 def test_simhash_signature_computed_once(spark):
