@@ -17,9 +17,12 @@ Design lineage (public techniques only):
   ``/root/reference/engine/core/ocr_llm_calling_modules.py:49-79`` — replaced
   by a deterministic local classifier, per the north rule.
 
-No third-party HTML parser is used (none is available in the runtime); the
-tokenizer below is a small regex state machine that handles tags, comments,
-script/style raw-text elements, and entity unescaping.
+No third-party HTML parser is used (none is available in the runtime). A
+document goes through three steps: ``_split_tags`` tokenizes it with one regex
+split (elements, comments, CDATA, declarations, processing instructions);
+``segment_blocks`` walks the tags once, collecting each block's raw text
+pieces, skipping script/style raw text, and unescaping entities per block;
+``classify_blocks`` labels the blocks.
 """
 
 from __future__ import annotations
@@ -38,30 +41,37 @@ __all__ = [
 
 # --- tokenizer ---------------------------------------------------------------
 
-# The element branch comes FIRST: it is the overwhelmingly common match and
-# Python's regex engine tries alternatives in order, so leading with it
-# skips four guaranteed-fail attempts per real tag (~6% on the raw scan).
-# Order is semantics-preserving — `<!`/`<?` can never match the element
-# branch (its second char must be [a-zA-Z] or `/`), verified by an
-# exhaustive match-by-match comparison against the old ordering.
+# One regex, run through re.split: the whole pattern is one capture group,
+# so split yields a flat [text, whole_tag, closing, name, text, ...] list
+# with no Match objects (finditer + groups() + span() measured ~25% slower).
+# Source offsets are recovered by summing part lengths.
 #
-# The tokenizer runs via re.split, not finditer: the whole pattern is one
-# capture group, so split yields a flat [text, whole_tag, closing, name,
-# text, ...] list with NO Match objects — measured ~25% faster
-# than finditer+groups()+span() on the same corpus. Source positions are
-# recovered by accumulating part lengths. The attrs run is non-capturing
-# (nothing consumes it), and the optional self-close slash is matched by
-# the attrs run itself ("/" is in [^>\"']) — the old (/?) capture group
-# was never read and cost a fifth list slot per tag in the split output.
+# The element branch comes first: it is the common match, and `<!`/`<?` can
+# never match it. Its attribute run is atomic and possessive, and so is the
+# name. Each attribute token (an unquoted run, "...", '...') matches in
+# exactly one way, and giving tokens back only leaves a non-`>` character
+# next, so backtracking into the run could never find another match, only
+# fail more slowly: the split is the same as with the backtracking form,
+# and ~20% faster on the benchmark pages. The optional self-closing slash
+# is matched by the attribute run ("/" is in [^>"']). An unterminated quote
+# or comment still makes the scan from its `<` run to the end of the
+# document, so adversarial input takes quadratic time.
 _TAG_RE = re.compile(
-    r"(<(/?)([a-zA-Z][a-zA-Z0-9:-]*)(?:\"[^\"]*\"|'[^']*'|[^>\"'])*>"
+    r"(<(/?)([a-zA-Z][a-zA-Z0-9:-]*+)(?>[^>\"']+|\"[^\"]*\"|'[^']*')*+>"
     r"|<!--.*?-->"  # comments
     r"|<!\[CDATA\[.*?\]\]>"  # cdata
-    r"|<!(?:[^>])*>"  # doctype / other declarations
-    r"|<\?(?:[^>])*>)",  # processing instructions
+    r"|<![^>]*+>"  # doctype / other declarations
+    r"|<\?[^>]*+>)",  # processing instructions
     re.DOTALL,
 )
-_SPLIT_STEP = 4  # fields per tag in _TAG_RE.split output
+
+
+def _split_tags(html_text: str) -> list[str | None]:
+    """[text, whole_tag, closing, name, text, ...]: `closing` is "/" or ""
+    and `name` the tag name for an element, both None for a comment, CDATA
+    section, declaration or processing instruction."""
+    return _TAG_RE.split(html_text)
+
 
 # Tags whose opening/closing terminates the current text block.
 _BLOCK_TAGS = frozenset(
@@ -84,8 +94,6 @@ _BOILER_CONTAINERS = frozenset(
 _VOID_TAGS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
 )
-
-_WS_RE = re.compile(r"\s+")
 
 # Per-tag behavior bits, folded into ONE dict lookup for the hot loop
 # (replaces a chain of 3-6 frozenset membership tests per tag). Common
@@ -144,59 +152,60 @@ class ExtractResult:
     blocks: list[Block] = field(default_factory=list)
 
 
+def _unescape(s: str) -> str:
+    """html.unescape, with a shortcut when every entity is "&amp;" (the
+    common one): then a plain replace gives the same string."""
+    if s.count("&") == s.count("&amp;"):
+        return s.replace("&amp;", "&")
+    return _html.unescape(s)
+
+
 def _finish_block(
-    runs: list[tuple[str, bool, int, int]],
+    pieces: list[str],
+    anchors: list[str],
+    src_start: int,
+    src_end: int,
     n_tags: int,
     block_id: int,
     in_article: int,
     in_boiler: int,
     kind: str,
 ) -> Block | None:
-    """Build a Block from accumulated (text, is_anchor, start, end) runs."""
-    if len(runs) == 1:
-        # single-run fast path (the common case: one text run between
-        # tags): the anchor text, when present, IS the whole run, so its
-        # normalized length equals n_chars — no second normalize pass
-        raw, is_anchor, _, _ = runs[0]
-        text = normalize_ws(_html.unescape(raw) if "&" in raw else raw)
-        if not text:
-            return None
-        anchor_len = len(text) if is_anchor else 0
-    else:
-        raw = "".join([r[0] for r in runs])  # listcomp: faster than genexpr in join
-        # entity unescape only when an entity can exist (hot path: plain text)
-        text = normalize_ws(_html.unescape(raw) if "&" in raw else raw)
-        if not text:
-            return None
-        anchor_runs = [r[0] for r in runs if r[1]]
-        if anchor_runs:
-            anchor_raw = (
-                anchor_runs[0] if len(anchor_runs) == 1 else "".join(anchor_runs)
-            )
-            anchor_len = len(
-                normalize_ws(
-                    _html.unescape(anchor_raw) if "&" in anchor_raw else anchor_raw
-                )
-            )
-        else:
-            anchor_len = 0
+    """Build a Block from its raw text pieces, of which `anchors` are the
+    ones inside an <a>."""
+    raw = "".join(pieces)
+    # entity unescape only when an entity can exist (hot path: plain text)
+    if "&" in raw:
+        raw = _unescape(raw)
+    words = raw.split()
+    if not words:
+        return None
+    text = " ".join(words)
     n_chars = len(text)
-    n_words = text.count(" ") + 1
+    n_words = len(words)
+    if not anchors:
+        anchor_len = 0
+    elif len(anchors) == len(pieces):
+        anchor_len = n_chars  # every piece is anchor text
+    else:
+        anchor_raw = "".join(anchors)
+        if "&" in anchor_raw:
+            anchor_raw = _unescape(anchor_raw)
+        anchor_len = len(" ".join(anchor_raw.split()))
     # Boilerpipe-style wrapped-line text density (80-char lines);
     # integer ceil — n_chars >= 1 here, so the result is always >= 1.
     # Positional construction: keyword construction of a 15-field slots
-    # dataclass measured ~2x slower on this hot path (one Block per text
-    # block, ~18 per document).
+    # dataclass measured ~2x slower on this hot path.
     return Block(
         block_id,
         text,
-        runs[0][2],
-        runs[-1][3],
+        src_start,
+        src_end,
         n_chars,
         n_words,
         anchor_len,
         n_tags,
-        anchor_len / n_chars,  # n_chars >= 1 (empty text returned above)
+        anchor_len / n_chars,
         n_words / ((n_chars + 79) // 80),
         in_article > 0,
         in_boiler > 0,
@@ -207,78 +216,70 @@ def _finish_block(
 def segment_blocks(html_text: str) -> list[Block]:
     """Segment decoded HTML into text blocks at block-tag boundaries."""
     blocks: list[Block] = []
-    runs: list[tuple[str, bool, int, int]] = []  # (raw_text, in_anchor, start, end)
+    pieces: list[str] = []  # raw text pieces of the open block
+    anchors: list[str] = []  # those of them inside an <a>
+    first = end = 0  # source offsets of the first piece and past the last
     n_tags = 0
     in_anchor = 0
     in_article = 0
     in_boiler = 0
-    rawtext_until: str | None = None  # inside <script>/<style>
+    rawtext_open = False  # the document ends inside <script>/<style>
     kind_stack: list[str] = []
-    pos = 0
 
-    # (the old flush() closure is inlined at its two call sites below:
-    # a closure call + nonlocal write per block boundary measured ~5% of
-    # the whole kernel. `runs` is cleared IN PLACE, not rebound, so the
-    # hot loop's bound runs_append stays valid; _finish_block only keeps
-    # scalars/strings.)
-
-    # hot loop: ~100 iterations per document across the whole corpus —
-    # locals for everything reached per iteration; per-tag behavior is ONE
-    # _TAG_FLAGS dict lookup (flags==0 covers unknown + common inline tags),
-    # and lower() runs only when a tag isn't already lowercase (the
-    # overwhelming case), which skips one string alloc per tag.
-    # parts = [text, whole_tag, closing, name, text, ...]; iterating
-    # zip() over strided slices beats manual index arithmetic (~10% on
-    # the loop) — the trailing text after the last tag is parts[-1],
-    # outside every 4-stride group, handled after the loop as before.
     _flags_get = _TAG_FLAGS.get
-    runs_append = runs.append
-    parts = _TAG_RE.split(html_text)
-    for seg, whole, closing, name in zip(
-        parts[0::_SPLIT_STEP],
-        parts[1::_SPLIT_STEP],
-        parts[2::_SPLIT_STEP],
-        parts[3::_SPLIT_STEP],
-    ):
+    pieces_append = pieces.append
+    parts = _split_tags(html_text)
+    pos = 0  # source offset of the current part
+    # one iteration per tag, with the text before it: the parts list read
+    # four at a time; the text after the last tag, parts[-1], is left over
+    # and handled after the loop
+    part = iter(parts)
+    tags = zip(part, part, part, part)
+    for seg, whole, closing, name in tags:
         if seg:
-            if rawtext_until is None:
-                mstart = pos + len(seg)
-                runs_append((seg, in_anchor > 0, pos, mstart))
-                pos = mstart + len(whole)
-            else:
-                pos += len(seg) + len(whole)
-        else:
-            pos += len(whole)
-        if name is None:
-            continue  # comment/doctype/PI
+            if not pieces:
+                first = pos
+            pieces_append(seg)
+            if in_anchor:
+                anchors.append(seg)
+            pos += len(seg)
+            end = pos
+        pos += len(whole)
         flags = _flags_get(name)
         if flags is None:
-            if not name.islower():
-                name = name.lower()
-                flags = _flags_get(name, 0)
+            if name is None:
+                continue  # comment/doctype/PI
+            name = name.lower()
+            flags = _flags_get(name, 0)
+        if flags == _F_ANCHOR:
+            if closing:
+                if in_anchor:
+                    in_anchor -= 1
             else:
-                flags = 0
-        if rawtext_until is not None:
-            if closing and name == rawtext_until:
-                rawtext_until = None
-            continue
-        if flags == 0:
-            if not closing:
                 n_tags += 1
-            continue
-        if flags & _F_BLOCK:
-            if runs:
-                b = _finish_block(
-                    runs,
-                    n_tags,
-                    len(blocks),
-                    in_article,
-                    in_boiler,
-                    kind_stack[-1] if kind_stack else "div",
-                )
-                if b is not None:
-                    blocks.append(b)
-                runs.clear()
+                in_anchor += 1
+        elif flags & _F_BLOCK:
+            if pieces:
+                # a lone whitespace piece (the newline between two block
+                # tags: about half of the boundaries with text) makes no
+                # block
+                if len(pieces) > 1 or not pieces[0].isspace():
+                    b = _finish_block(
+                        pieces,
+                        anchors,
+                        first,
+                        end,
+                        n_tags,
+                        len(blocks),
+                        in_article,
+                        in_boiler,
+                        kind_stack[-1] if kind_stack else "div",
+                    )
+                    if b is not None:
+                        blocks.append(b)
+                pieces.clear()  # in place: pieces_append is bound to it
+                if anchors:
+                    anchors.clear()
             n_tags = 0
             # Anchor state RESETS at block boundaries: an unclosed <a> in
             # scraped HTML (common) would otherwise mark every later text
@@ -294,39 +295,47 @@ def segment_blocks(html_text: str) -> list[Block]:
                 in_anchor = 0
                 if not closing:
                     kind_stack.append(name)
-                elif kind_stack and name in kind_stack:
+                elif name in kind_stack:
                     # pop to the matching open tag (tolerant of misnesting)
-                    while kind_stack:
-                        if kind_stack.pop() == name:
-                            break
-            if flags & _F_CONTENT:
-                in_article += -1 if closing else 1
-                in_article = max(0, in_article)
-            elif flags & _F_BOILER:
-                in_boiler += -1 if closing else 1
-                in_boiler = max(0, in_boiler)
-        elif flags & _F_ANCHOR:
-            if closing:
-                if in_anchor:
-                    in_anchor -= 1
-            else:
-                n_tags += 1
-                in_anchor += 1
+                    while kind_stack.pop() != name:
+                        pass
+            if flags >= _F_CONTENT:  # a content or boilerplate container
+                if flags & _F_CONTENT:
+                    if not closing:
+                        in_article += 1
+                    elif in_article:
+                        in_article -= 1
+                elif not closing:
+                    in_boiler += 1
+                elif in_boiler:
+                    in_boiler -= 1
         elif flags & _F_RAWTEXT:
             if not closing:
-                rawtext_until = name
-        else:
-            # void-only inline tags (img/input/link/meta...): open counts as
-            # a tag, same as the unknown-tag path
-            if not closing:
-                n_tags += 1
+                # raw text: skip every part up to the matching close tag
+                for seg, whole, closing, end_name in tags:
+                    pos += len(seg) + len(whole)
+                    if closing and end_name.lower() == name:
+                        break
+                else:
+                    rawtext_open = True
+        elif not closing:
+            # inline, void-inline or unknown tag
+            n_tags += 1
     # trailing text after the last tag
-    if pos < len(html_text) and rawtext_until is None:
-        seg = html_text[pos:]
-        runs.append((seg, in_anchor > 0, pos, len(html_text)))
-    if runs:
+    seg = parts[-1]
+    if seg and not rawtext_open:
+        if not pieces:
+            first = pos
+        pieces_append(seg)
+        if in_anchor:
+            anchors.append(seg)
+        end = pos + len(seg)
+    if pieces:
         b = _finish_block(
-            runs,
+            pieces,
+            anchors,
+            first,
+            end,
             n_tags,
             len(blocks),
             in_article,
@@ -335,7 +344,6 @@ def segment_blocks(html_text: str) -> list[Block]:
         )
         if b is not None:
             blocks.append(b)
-        runs.clear()
     return blocks
 
 
@@ -344,14 +352,27 @@ def segment_blocks(html_text: str) -> list[Block]:
 _MAX_LINK_DENSITY = 1.0 / 3.0
 _MIN_CONTENT_WORDS = 16
 _NEIGHBOR_WORDS = 8
+_FULL_LENGTH_WORDS = 2 * _MIN_CONTENT_WORDS  # length confidence saturates here
+
+
+def _boiler_conf(base: float) -> tuple[float, ...]:
+    """Confidence in a boilerplate label with prior `base`, per word count
+    below _FULL_LENGTH_WORDS; from there on it is `base` itself."""
+    out = []
+    for n_words in range(_FULL_LENGTH_WORDS):
+        c = base + 0.1 * (1.0 - n_words / (2.0 * _MIN_CONTENT_WORDS))
+        out.append(round(c, 4) if c < 1.0 else 1.0)
+    return tuple(out)
+
+
+_BOILER_CONF = (_boiler_conf(0.6), _boiler_conf(0.9))  # [depth_boiler][n_words]
 
 
 def classify_blocks(blocks: list[Block]) -> list[Block]:
     """Content/boilerplate labeling: structural priors, then density rules,
     then one neighbor-smoothing pass (Boilerpipe NumberOfWordsClassifier
-    simplification)."""
-    n = len(blocks)
-    for i, b in enumerate(blocks):
+    simplification), then a per-block confidence in the label."""
+    for b in blocks:
         if b.depth_boiler:
             # nav/header/footer/aside: boilerplate unless it is a long,
             # link-free passage (rare but possible: footers with legal text)
@@ -360,38 +381,48 @@ def classify_blocks(blocks: list[Block]) -> list[Block]:
             # article/main: content unless dominated by links
             b.is_content = b.link_density <= 0.5
         else:
-            if b.link_density > _MAX_LINK_DENSITY:
-                b.is_content = False
-            elif b.n_words >= _MIN_CONTENT_WORDS:
-                b.is_content = True
-            else:
-                b.is_content = False
-    # neighbor smoothing: a short low-link block flanked by content becomes content
-    for i, b in enumerate(blocks):
-        if b.is_content or b.depth_boiler or b.link_density > _MAX_LINK_DENSITY:
-            continue
-        prev_c = i > 0 and blocks[i - 1].is_content and blocks[i - 1].n_words >= _NEIGHBOR_WORDS
-        next_c = i + 1 < n and blocks[i + 1].is_content and blocks[i + 1].n_words >= _NEIGHBOR_WORDS
-        if prev_c and next_c:
+            b.is_content = (
+                b.link_density <= _MAX_LINK_DENSITY and b.n_words >= _MIN_CONTENT_WORDS
+            )
+    # One pass for smoothing and confidence: a block's label is final once
+    # smoothing has looked at it, and smoothing reads the previous block's
+    # final label and the next block's first-pass label, as a separate
+    # smoothing pass would.
+    # Smoothing: a short low-link block flanked by content becomes content.
+    # Confidence (north star: per-block confidence scoring): strong signals
+    # = structural container agreement, long link-free text; weak =
+    # smoothing rescues, short blocks. Conditional expressions instead of
+    # min(): a builtin call per clamp is measurable at this volume.
+    prev_c = False  # the previous block is content with >= _NEIGHBOR_WORDS words
+    for b, nxt in zip(blocks, blocks[1:] + [None]):
+        n_words = b.n_words
+        if (
+            prev_c
+            and not b.is_content
+            and not b.depth_boiler
+            and b.link_density <= _MAX_LINK_DENSITY
+            and nxt is not None
+            and nxt.is_content
+            and nxt.n_words >= _NEIGHBOR_WORDS
+        ):
             b.is_content = True
-    # per-block confidence in the assigned label (north star: per-block
-    # confidence scoring): strong signals = structural container agreement,
-    # long link-free text; weak = smoothing rescues, short blocks
-    # conditional expressions instead of min() — a builtin call per clamp
-    # is measurable at one-block-per-~60-chars volume (values unchanged)
-    for b in blocks:
-        ld = b.link_density / _MAX_LINK_DENSITY
-        link_conf = 1.0 - (ld if ld < 1.0 else 1.0) * 0.5
-        lc = b.n_words / (2.0 * _MIN_CONTENT_WORDS)
-        length_conf = lc if lc < 1.0 else 1.0
         if b.is_content:
-            base = 0.9 if b.depth_article else 0.6
-            c = base * link_conf + 0.4 * length_conf
-            b.confidence = round(c if c < 1.0 else 1.0, 4)
+            lc = n_words / (2.0 * _MIN_CONTENT_WORDS)
+            length_conf = lc if lc < 1.0 else 1.0
+            ld = b.link_density / _MAX_LINK_DENSITY
+            link_conf = 1.0 - (ld if ld < 1.0 else 1.0) * 0.5
+            c = (0.9 if b.depth_article else 0.6) * link_conf + 0.4 * length_conf
+            b.confidence = round(c, 4) if c < 1.0 else 1.0
+            prev_c = n_words >= _NEIGHBOR_WORDS
         else:
-            base = 0.9 if b.depth_boiler else 0.6
-            c = base + 0.1 * (1.0 - length_conf)
-            b.confidence = round(c if c < 1.0 else 1.0, 4)
+            # depends only on the prior and, below the length clamp, on
+            # the word count: tabulated once (round() is the costly part)
+            b.confidence = (
+                _BOILER_CONF[b.depth_boiler][n_words]
+                if n_words < _FULL_LENGTH_WORDS
+                else 0.9 if b.depth_boiler else 0.6
+            )
+            prev_c = False
     return blocks
 
 
@@ -457,6 +488,8 @@ def extract_doc(html_bytes: bytes | None) -> ExtractResult:
         html_text = str(html_bytes)
     blocks = classify_blocks(segment_blocks(html_text))
     content = [b for b in blocks if b.is_content]
-    text = _BLOCK_SEP.join(b.text for b in content)
-    spans = [(b.src_start, b.src_end, b.block_id) for b in content]
-    return ExtractResult(text=text, spans=spans, blocks=blocks)
+    return ExtractResult(
+        _BLOCK_SEP.join([b.text for b in content]),
+        [(b.src_start, b.src_end, b.block_id) for b in content],
+        blocks,
+    )

@@ -681,8 +681,8 @@ def minhash_incremental(
     persisted (`minhash_bands_df` output — the signature store). Only the
     NEW slice is shingled/signed here; the committed side contributes its
     stored band keys, and its text is touched only for the candidate ids
-    the verify stage actually needs (left-semi join, same as the base
-    operator). Pass `committed_bands=None` to derive them in-place
+    the verify stage actually needs (an inner join on the distinct
+    candidate ids, same as the base operator). Pass `committed_bands=None` to derive them in-place
     (correct, but that re-signs the corpus — the thing this form avoids).
 
     Candidate generation: band rows are tagged `is_new`, bucketed together

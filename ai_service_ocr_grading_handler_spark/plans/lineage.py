@@ -36,6 +36,7 @@ import time
 from pathlib import Path
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
@@ -76,8 +77,8 @@ def _manifest_path(out_root: str, run_id: str) -> Path:
     return Path(out_root) / "runs" / f"{run_id}.json"
 
 
-def _committed_parquet(d: Path) -> bool:
-    """True iff `d` holds at least one COMMITTED parquet file. Leftover task
+def _committed_parquet(d: Path) -> Path | None:
+    """The first COMMITTED parquet file under `d`, or None. Leftover task
     files under _temporary/ (driver killed before abortJob cleanup) and
     other _/.-prefixed paths are ignored — Spark's reader skips them, so a
     probe that counted them would make the subsequent read fail schema
@@ -85,8 +86,8 @@ def _committed_parquet(d: Path) -> bool:
     for p in d.rglob("*.parquet"):
         rel = p.relative_to(d)
         if not any(part.startswith(("_", ".")) for part in rel.parts):
-            return True
-    return False
+            return p
+    return None
 
 
 def _read_extracted(spark: SparkSession, out_root: str) -> DataFrame:
@@ -188,6 +189,19 @@ class SimulatedCrash(RuntimeError):
     callers never pass `_crash_after`."""
 
 
+def _live_version(ledger_dir: str) -> tuple[Path, Path] | None:
+    """(version directory, one committed file in it) named by the ledger's
+    `current` pointer, or None for an empty/uninitialized ledger or a
+    version that is not a committed parquet write."""
+    root = Path(ledger_dir)
+    pointer = root / "current"
+    if not pointer.exists():
+        return None
+    vdir = root / pointer.read_text().strip()
+    part = _committed_parquet(vdir) if vdir.exists() else None
+    return None if part is None else (vdir, part)
+
+
 def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame | None:
     """Reader contract for the versioned ledger: resolve the `current`
     pointer, then read that version ONLY if its directory is a committed
@@ -195,14 +209,8 @@ def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame | None:
     resolves its base, so readers and writers can never disagree about
     which version is live — the snapshot-pointer isolation Iceberg gives.
     Returns None for an empty/uninitialized ledger."""
-    root = Path(ledger_dir)
-    pointer = root / "current"
-    if not pointer.exists():
-        return None
-    vdir = root / pointer.read_text().strip()
-    if vdir.exists() and _committed_parquet(vdir):
-        return spark.read.parquet(str(vdir))
-    return None
+    live = _live_version(ledger_dir)
+    return None if live is None else spark.read.parquet(str(live[0]))
 
 
 def merge_upsert(
@@ -241,7 +249,24 @@ def merge_upsert(
     root = Path(ledger_dir)
     root.mkdir(parents=True, exist_ok=True)
     pointer = root / "current"
-    base = read_ledger(spark, ledger_dir)
+    cols = updates.columns
+    # The base is read with the schema of `updates`, so no schema-inference
+    # job runs. Its columns are checked first against one file footer (no
+    # Spark job either; names compared case-insensitively, as Spark
+    # resolves them): a ledger with other columns raises, as the
+    # unionByName below would on an inferred schema.
+    live = _live_version(ledger_dir)
+    base = None
+    if live is not None:
+        import pyarrow.parquet as pq
+
+        ledger_cols = pq.read_schema(live[1]).names
+        if sorted(c.lower() for c in ledger_cols) != sorted(c.lower() for c in cols):
+            raise AnalysisException(
+                message=f"merge_upsert: ledger columns {ledger_cols} differ "
+                f"from update columns {cols}"
+            )
+        base = spark.read.schema(updates.schema).parquet(str(live[0]))
     _crash("read_base")
     # one row per key in the applied update set: MERGE semantics forbid
     # multiple matches for one key (Iceberg errors; Mongo's update_one
@@ -251,7 +276,6 @@ def merge_upsert(
     # orders by a version column it includes in the row (duplicate keys
     # used to be inserted side by side, corrupting the ledger for every
     # later read). The tag in front makes any update beat the ledger row.
-    cols = updates.columns
     tag = "_upsert_tag"
     rows = updates.withColumn(tag, F.lit(1))
     if base is not None:

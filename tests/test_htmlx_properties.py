@@ -14,6 +14,9 @@ from ai_service_ocr_grading_handler_spark.core.htmlx import extract_doc, normali
 _TOKENS = list("abc <>/=\"'&;!-\n\tÀ中ぁ\x00") + [
     "<p>", "</p>", "<a href='x'>", "</a>", "<div", "<!--", "-->",
     "<script>", "</script>", "<article>", "&amp;", "&#60;", "word ",
+    # tokenizer branches: case, quotes, declarations, raw text, voids
+    '<A HREF="a>b">', "</NAV>", '<a title="x ', "<![CDATA[", "]]>",
+    "<!DOCTYPE html>", "<?xml ?>", "<style>", "</style>", "<br>", "</",
 ]
 _soup = st.lists(st.sampled_from(_TOKENS), max_size=80).map("".join)
 
