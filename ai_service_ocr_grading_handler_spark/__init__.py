@@ -7,7 +7,13 @@ ai_service_ocr_grading_handler_spark` stays cheap on executors.
 
 from __future__ import annotations
 
+from ai_service_ocr_grading_handler_spark.core import pyworker as _pyworker
+
 __version__ = "0.1.0"
+
+# Every task function of this package is unpickled inside a worker, which
+# imports this module first: one call here covers every Python UDF site.
+_pyworker.install()
 
 __all__ = [
     "get_spark",

@@ -34,16 +34,22 @@ from __future__ import annotations
 import json
 import time
 from pathlib import Path
+from typing import TYPE_CHECKING
 
 import pyspark.sql.functions as F
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
 from ai_service_ocr_grading_handler_spark.operators.extract import (
     EXTRACTED_SCHEMA_DDL,
     extract_pages,
 )
+from ai_service_ocr_grading_handler_spark.sources.pages import committed_parquet
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 HOST_RE = r"https?://([^/]+)/"
 
@@ -77,19 +83,6 @@ def _manifest_path(out_root: str, run_id: str) -> Path:
     return Path(out_root) / "runs" / f"{run_id}.json"
 
 
-def _committed_parquet(d: Path) -> Path | None:
-    """The first COMMITTED parquet file under `d`, or None. Leftover task
-    files under _temporary/ (driver killed before abortJob cleanup) and
-    other _/.-prefixed paths are ignored — Spark's reader skips them, so a
-    probe that counted them would make the subsequent read fail schema
-    inference in exactly the crash scenario resume exists for."""
-    for p in d.rglob("*.parquet"):
-        rel = p.relative_to(d)
-        if not any(part.startswith(("_", ".")) for part in rel.parts):
-            return p
-    return None
-
-
 def _read_extracted(spark: SparkSession, out_root: str) -> DataFrame:
     schema = EXTRACTED_SCHEMA_DDL + ", run_id string"
     return spark.read.schema(schema).parquet(str(_extracted_dir(out_root)))
@@ -115,7 +108,7 @@ def completed_urls(spark: SparkSession, out_root: str) -> DataFrame | None:
     """The resume frontier: urls already committed to the extracted table
     (column-pruned scan — only `url` is read)."""
     d = _extracted_dir(out_root)
-    if not d.exists() or not _committed_parquet(d):
+    if not committed_parquet(d):
         return None
     return _read_extracted(spark, out_root).select("url")
 
@@ -189,17 +182,21 @@ class SimulatedCrash(RuntimeError):
     callers never pass `_crash_after`."""
 
 
-def _live_version(ledger_dir: str) -> tuple[Path, Path] | None:
-    """(version directory, one committed file in it) named by the ledger's
-    `current` pointer, or None for an empty/uninitialized ledger or a
-    version that is not a committed parquet write."""
+def _live_version(ledger_dir: str) -> tuple[Path, pa.Schema] | None:
+    """(version directory, footer schema of one committed file in it)
+    named by the ledger's `current` pointer, or None for an
+    empty/uninitialized ledger or a version that is not a committed parquet
+    write. The one footer read serves both read_ledger's schema and
+    merge_upsert's column check."""
+    import pyarrow.parquet as pq
+
     root = Path(ledger_dir)
     pointer = root / "current"
     if not pointer.exists():
         return None
     vdir = root / pointer.read_text().strip()
-    part = _committed_parquet(vdir) if vdir.exists() else None
-    return None if part is None else (vdir, part)
+    part = committed_parquet(vdir)
+    return None if part is None else (vdir, pq.read_schema(part))
 
 
 def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame | None:
@@ -208,9 +205,17 @@ def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame | None:
     parquet write (_SUCCESS present). This is exactly how merge_upsert
     resolves its base, so readers and writers can never disagree about
     which version is live — the snapshot-pointer isolation Iceberg gives.
-    Returns None for an empty/uninitialized ledger."""
+    Returns None for an empty/uninitialized ledger.
+
+    The version is read with the schema Spark wrote into its footer (every
+    version is a Spark write by merge_upsert), so no schema-inference job
+    runs."""
     live = _live_version(ledger_dir)
-    return None if live is None else spark.read.parquet(str(live[0]))
+    if live is None:
+        return None
+    vdir, footer = live
+    written = json.loads(footer.metadata[b"org.apache.spark.sql.parquet.row.metadata"])
+    return spark.read.schema(StructType.fromJson(written)).parquet(str(vdir))
 
 
 def merge_upsert(
@@ -258,9 +263,7 @@ def merge_upsert(
     live = _live_version(ledger_dir)
     base = None
     if live is not None:
-        import pyarrow.parquet as pq
-
-        ledger_cols = pq.read_schema(live[1]).names
+        ledger_cols = live[1].names
         if sorted(c.lower() for c in ledger_cols) != sorted(c.lower() for c in cols):
             raise AnalysisException(
                 message=f"merge_upsert: ledger columns {ledger_cols} differ "

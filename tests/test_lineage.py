@@ -419,3 +419,28 @@ def test_resume_path_job_counts(spark, tmp_path):
     assert m["rows_written"] > 0 and v["consistent"], (m, v)
     assert lineage.read_ledger(spark, ledger).count() == pages.count()
     assert n_run <= 6 and n_merge <= 2 and n_verify <= 4, (n_run, n_merge, n_verify)
+
+
+def test_read_ledger_uses_the_written_schema_without_a_job(spark, tmp_path):
+    """read_ledger takes the schema Spark wrote into the live version's
+    footer: the same schema and rows an inferring read gives, and no Spark
+    job (inference ran a one-task job on every ledger read)."""
+    import datetime as dt
+
+    ledger = str(tmp_path / "ledger")
+    ddl = "url string, run_id string, chars bigint, score double, seen timestamp, tags array<string>"
+    ts = dt.datetime(2024, 1, 2, 3, 4, 5)
+    rows = [("u1", "01", 5, 0.5, ts, ["a"]), ("u2", "02", None, None, None, None)]
+    lineage.merge_upsert(spark, ledger, spark.createDataFrame(rows[:1], ddl), "url")
+    lineage.merge_upsert(spark, ledger, spark.createDataFrame(rows, ddl), "url")
+
+    got, n_jobs = _jobs_in_group(spark, "ledger-read", lambda: lineage.read_ledger(spark, ledger))
+    assert n_jobs == 0
+    inferred = spark.read.parquet(f"{ledger}/v1")
+    assert got.schema == inferred.schema
+    assert got.schema.simpleString() == (
+        "struct<url:string,run_id:string,chars:bigint,score:double,"
+        "seen:timestamp,tags:array<string>>"
+    )
+    assert sorted(got.collect()) == sorted(inferred.collect())
+    assert sorted(map(tuple, got.collect())) == rows

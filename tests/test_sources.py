@@ -2,10 +2,16 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
+from pyspark.errors import AnalysisException
 
 from ai_service_ocr_grading_handler_spark.corpus import pages_df_from_documents
+from ai_service_ocr_grading_handler_spark.operators.extract import extract_pages
 from ai_service_ocr_grading_handler_spark.sources import pages as src
+from tests.test_lineage import _jobs_in_group
 
 SF = "/root/testdata/sf0.001"
 
@@ -56,6 +62,72 @@ def test_lang_filter_is_pushed_to_scan(spark, tmp_path):
     assert "PushedFilters" in plan and "lang" in plan
     assert df.count() > 0
     assert df.filter(F.col("lang") != "en").count() == 0
+
+
+_ARROW_PAGES = pa.schema(
+    [
+        ("url", pa.string()),
+        ("warc_ts", pa.timestamp("us")),  # naive: Spark infers timestamp_ntz
+        ("html", pa.binary()),
+        ("text", pa.string()),
+        ("lang", pa.string()),
+    ]
+)
+
+
+def _pages_tables(spark, root, drop: str | None = None) -> dict[str, str]:
+    """The sf0.001 pages written by Spark (day-partitioned) and by pyarrow
+    (two flat files, as perfbench writes them), minus column `drop`."""
+    df = pages_df_from_documents(spark, SF)
+    arrow = pa.Table.from_pylist([r.asDict() for r in df.collect()], schema=_ARROW_PAGES)
+    if drop is not None:
+        df, arrow = df.drop(drop), arrow.drop_columns([drop])
+    src.write_pages_partitioned(df, str(root / "spark_pages"))
+    (root / "arrow_pages").mkdir(parents=True)
+    half = arrow.num_rows // 2
+    pq.write_table(arrow.slice(0, half), root / "arrow_pages" / "part-0000.parquet")
+    pq.write_table(arrow.slice(half), root / "arrow_pages" / "part-0001.parquet")
+    return {"spark": str(root / "spark_pages"), "pyarrow": str(root / "arrow_pages")}
+
+
+def _extracted(pages):
+    """Extracted rows, warc_ts as text, less the per-document timing."""
+    ext = extract_pages(pages).drop("extract_us")
+    return sorted(map(tuple, ext.withColumn("warc_ts", F.col("warc_ts").cast("string")).collect()))
+
+
+def test_read_pages_extracts_as_the_inferring_read(spark, tmp_path):
+    """Reading with PAGES_SCHEMA instead of an inferred schema changes no
+    extracted row, warc_ts included, whichever writer made the table;
+    pyarrow's naive timestamps now read as the session-zone timestamp."""
+    for writer, path in _pages_tables(spark, tmp_path).items():
+        inferred = spark.read.parquet(path).select(*src.PAGES_COLUMNS)
+        got = src.read_pages(spark, path)
+        assert got.schema["warc_ts"].dataType.typeName() == "timestamp", writer
+        if writer == "pyarrow":
+            assert inferred.schema["warc_ts"].dataType.typeName() == "timestamp_ntz"
+        assert _extracted(got) == _extracted(inferred), writer
+
+
+def test_read_pages_runs_no_job_and_rejects_a_missing_column(spark, tmp_path):
+    tables = _pages_tables(spark, tmp_path)
+    # a partition column can carry a pages column: it is in no footer
+    tables["by_lang"] = str(tmp_path / "by_lang")
+    spark.read.parquet(tables["spark"]).drop("warc_day").write.partitionBy("lang").parquet(
+        tables["by_lang"]
+    )
+    for writer, path in tables.items():
+        got, n_jobs = _jobs_in_group(spark, f"read-pages-{writer}", lambda: src.read_pages(spark, path))
+        assert n_jobs == 0, writer
+        assert got.columns == src.PAGES_COLUMNS, writer
+    for writer, path in _pages_tables(spark, tmp_path / "no_lang", drop="lang").items():
+
+        def attempt():
+            with pytest.raises(AnalysisException, match=r"columns \['lang'\]"):
+                src.read_pages(spark, path)
+
+        _, n_jobs = _jobs_in_group(spark, f"read-pages-no-lang-{writer}", attempt)
+        assert n_jobs == 0, writer
 
 
 # --- WARC ingestion (round 4) --------------------------------------------------
